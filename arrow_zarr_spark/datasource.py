@@ -14,7 +14,10 @@ exactly what the reference contributes to DataFusion —
   row filters (A5–A7, ``datafusion_filters.rs``, ``table_provider.rs:91-96``)
 - filter-column read reuse (A6, ``zarr_data_stream.rs:943-963``)
 - partitioned parallel scan over the chunk grid (A8,
-  ``zarr_data_stream.rs:782-817``, ``scanner.rs:95-105``)
+  ``zarr_data_stream.rs:782-817``, ``scanner.rs:95-105``): one
+  planner, ``ZarrReader.partitions``, emits contiguous cell-ordinal
+  spans and runs one per-cell static-pruning test — on the driver for
+  grids up to ``plan_cells_max`` cells, in the tasks past it
 - reader-side prefetch with an I/O thread pool (A9/A10,
   ``zarr_data_stream.rs:631-714``, ``io_runtime.rs``)
 - coordinate broadcast / Cartesian semantics inside the scan (A14)
@@ -33,16 +36,16 @@ Options: ``path``, ``columns`` (comma-separated projection),
 — finer, and better for a 1000-executor cluster since Spark can
 schedule and steal at chunk granularity), ``io_threads`` (per-task
 decode pool), ``prefetch`` (chunk read-ahead depth),
-``plan_cells_max`` (cell count above which planning switches to the
-span tier — ordinal-range partitions, executor-side static pruning;
-default ``PLAN_DRIVER_CELLS_MAX``), ``pushdown`` ('false' disables
+``plan_cells_max`` (cell count above which the per-cell static
+pruning moves from the driver into the tasks, so planning never
+enumerates the grid; default ``PLAN_DRIVER_CELLS_MAX``), ``pushdown``
+('false' disables
 static pruning — the escape for relations/views reused by both
 filtered and unfiltered queries, see ``ZarrReader.pushFilters``).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import threading
@@ -85,7 +88,7 @@ from .filters import (
 from .zarr.array import ZarrArray, infer_store_arrays
 from .zarr.meta import STATS_ATTR_KEY, ArrayMeta, ZarrFormatError
 from .zarr.store import open_store
-from .zarr.table import ChunkPlan
+from .zarr.table import ChunkPlan, ordinal_to_cell
 
 __all__ = [
     "ZarrDataSource",
@@ -158,9 +161,9 @@ def _infer_struct(arrays: Sequence[ZarrArray]) -> StructType:
     )
 
 
-#: Worker-process-wide cache for the span tier's executor-side
-#: pruning artifacts (decoded sidecar statistics blocks, coordinate
-#: bound lists) — keyed by the per-scan token so the many tasks that
+#: Worker-process-wide cache for the task-side static-pruning
+#: artifacts (decoded sidecar statistics blocks, coordinate bound
+#: lists) — keyed by the per-scan token so the many tasks that
 #: share a sidecar block fetch it once per worker, never per task,
 #: and a later scan of a mutated store can't see stale bounds.
 _SPAN_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
@@ -218,10 +221,10 @@ def _span_cached(key: tuple, compute):
 
 
 def _decode_stat_bound(b, unit):
-    """One statistics bound, decoded exactly like the planning tier's
-    ``_stats_bounds`` does (shared so the two tiers cannot drift):
-    None propagates, datetime64 stats decode from their integer form,
-    malformed values degrade to unknown (never prune)."""
+    """One statistics bound, decoded for the scan's single static-
+    pruning test (driver and task placements alike): None propagates,
+    datetime64 stats decode from their integer form, malformed values
+    degrade to unknown (never prune)."""
     if b is None:
         return None
     if unit is not None:
@@ -233,8 +236,8 @@ def _decode_stat_bound(b, unit):
 
 
 def _entry_bounds(entry, unit):
-    """(lo, hi) from one per-object stats entry with the planning
-    tier's strictness: anything not a well-formed pair is unknown."""
+    """(lo, hi) from one per-object stats entry: anything not a
+    well-formed pair is unknown."""
     if not (isinstance(entry, (list, tuple)) and len(entry) == 2):
         return (None, None)
     return (
@@ -243,21 +246,11 @@ def _entry_bounds(entry, unit):
     )
 
 
-#: Driver-side cell-enumeration cap for scan PLANNING (r11): at or
-#: under it ``partitions()`` keeps the explicit-cell form (pruning at
-#: planning time, reference split semantics, bit-identical to every
-#: prior round). Past it the planner never materializes a cell list —
-#: partitions carry contiguous ordinal SPANS (O(n_partitions) driver
-#: memory however large the grid) and static pruning runs
-#: EXECUTOR-side per task against worker-cached bounds, so the one
-#: remaining O(n_cells) driver term (the FileIndex-class partition
-#: list the r10 verdict called API-inherent) is gone for the stores
-#: big enough to feel it.
 def _lattice_runs(keep, grid, budget):
     """Compose per-axis surviving grid-index sets into contiguous
-    C-order cell-ordinal runs without enumerating cells — the span
-    tier's pre-prune arithmetic (pure; property-tested against the
-    brute-force survivor set in tests/test_span_partitions.py).
+    C-order cell-ordinal runs without enumerating cells — the past-cap
+    coordinate pre-prune's arithmetic (pure; property-tested against
+    the brute-force survivor set in tests/test_span_partitions.py).
 
     ``keep[ax]`` must be ascending. Returns a sorted, disjoint,
     maximally-merged [(start, stop), ...) list; ``[]`` when any axis
@@ -304,27 +297,85 @@ def _lattice_runs(keep, grid, budget):
     return runs
 
 
+#: Driver-side cell-enumeration cap for scan planning: at or under it
+#: ``partitions()`` runs the static-pruning test on the driver and
+#: ships only survivor runs. Past it the driver never enumerates cells
+#: — partitions carry ordinal spans (O(n_partitions) driver memory
+#: however large the grid) and each task runs the same test on its
+#: own spans against worker-cached bounds.
 PLAN_DRIVER_CELLS_MAX = 1 << 22
 
-#: Scheduler-sanity cap for the span tier: a billion-cell store must
-#: not emit a billion Spark tasks — spans grow past this instead.
+#: Scheduler-sanity cap on the partition count: a billion-cell store
+#: must not emit a billion Spark tasks — partitions grow past this
+#: instead.
 SPAN_PARTITIONS_MAX = 1 << 20
+
+
+def _pack_runs(runs, n_cells, chunks_per=1, n_parts=None):
+    """Group sorted, disjoint cell-ordinal ``runs`` into per-partition
+    span lists — the scan's one grouping policy. Runs split at
+    partition boundaries, so the concatenated spans are the input
+    ordinals in order.
+
+    With ``n_parts``: the reference's ``repartitioned()`` split
+    (``zarr_data_stream.rs:805-817``, over-partition test 1328-1363)
+    — exactly ``n_parts`` partitions of ceil(N/p) cells over the N run
+    cells, trailing ones empty. Otherwise each partition holds
+    ``chunks_per`` cells, raised so a grid of ``n_cells`` never emits
+    more than ``SPAN_PARTITIONS_MAX`` partitions; an empty scan is one
+    empty partition."""
+    if n_parts:
+        per = max(1, -(-sum(e - s for s, e in runs) // n_parts))
+    else:
+        per = max(chunks_per, -(-n_cells // SPAN_PARTITIONS_MAX))
+    parts: List[List[Tuple[int, int]]] = []
+    cur: List[Tuple[int, int]] = []
+    cur_n = 0
+    for s, e in runs:
+        while s < e:
+            take = min(e - s, per - cur_n)
+            cur.append((s, s + take))
+            cur_n += take
+            s += take
+            if cur_n == per:
+                parts.append(cur)
+                cur, cur_n = [], 0
+    if cur:
+        parts.append(cur)
+    if n_parts:
+        parts += [[] for _ in range(n_parts - len(parts))]
+    return parts or [[]]
 
 
 @dataclass
 class ZarrInputPartition(InputPartition):
-    """A contiguous range of chunk-grid cells (picklable). Two
-    payload forms: an explicit cell list (the at-cap planning tier),
-    or ``spans`` — [(start, stop), ...) C-order cell-ordinal ranges
-    (the past-cap tier; ``cells`` is None and tasks enumerate cells
-    from the arithmetic)."""
+    """One scan task's share of the chunk grid (picklable): sorted,
+    disjoint [(start, stop), ...) C-order cell-ordinal ``spans`` of
+    ``grid``, and ``prune`` — True when the task must still run the
+    static-pruning test on them (grids past ``plan_cells_max``), False
+    when the planner already reduced them to survivors."""
 
-    cells: Optional[List[Tuple[int, ...]]]
+    spans: List[Tuple[int, int]]
+    grid: Tuple[int, ...]
+    prune: bool
 
-    def __init__(self, cells, spans=None):
-        self.cells = cells
+    def __init__(self, spans, grid, prune):
         self.spans = spans
-        self.value = cells if spans is None else spans
+        self.grid = tuple(grid)
+        self.prune = prune
+        self.value = spans
+
+    @property
+    def cells(self) -> Optional[List[Tuple[int, ...]]]:
+        """The partition's cells when planning fixed them; None when
+        the task prunes (the list could then be grid-sized)."""
+        if self.prune:
+            return None
+        return [
+            ordinal_to_cell(o, self.grid)
+            for s, e in self.spans
+            for o in range(s, e)
+        ]
 
 
 class ZarrDataSource(DataSource):
@@ -566,287 +617,118 @@ class ZarrReader(DataSourceReader):
             out[name] = (axis, blist)
         return out
 
-    def _stats_bounds(self, needed) -> Dict[str, list]:
-        """Per-column decoded [lo, hi]-per-CELL lists from writer
-        statistics (``STATS_ATTR_KEY``) for the ``needed`` columns,
-        indexed by the C-order cell ordinal — covers 1-D table stores
-        (ordinal = the chunk index) AND N-D grid stores (the grid
-        writer records one pair per cell). Validated against the live
-        plan grid so stale stats (length mismatch after out-of-band
-        edits) are ignored rather than trusted, and malformed bounds
-        degrade per-entry to unknown (the soundness bar: bad stats may
-        only ever KEEP cells)."""
-        out: Dict[str, list] = {}
-        plan_grid = tuple(self.plan.grid_shape)
-        n_cells = self.plan.n_cells
-        for a in self.arrays:
-            m = a.meta
-            if (
-                m.name not in needed
-                or m.ndim != len(plan_grid)
-                or tuple(m.chunk_grid_shape) != plan_grid
-            ):
-                continue
-            s = m.attributes.get(STATS_ATTR_KEY)
-            if not isinstance(s, list) and s is not None:
-                # past-cap stores carry a sidecar marker; the blocks
-                # load HERE — lazily, only for predicate columns, only
-                # during a pruning pass (zarr/stats.py) — so zarr.json
-                # stays small and unfiltered scans never pay the GETs
-                from .zarr.stats import resolve_stats
-
-                s = resolve_stats(a.store, m.name, s)
-            if not isinstance(s, list) or len(s) != n_cells:
-                continue
-            unit = None
-            if m.zarr_dtype.startswith("numpy.datetime64["):
-                unit = m.zarr_dtype[len("numpy.datetime64[") : -1]
-
-            def _decode(b, _unit=unit):
-                if b is None:
-                    return None
-                if _unit is not None:
-                    try:
-                        return np.datetime64(int(b), _unit)
-                    except (TypeError, ValueError, OverflowError):
-                        return None  # malformed bound: unknown
-                return b
-
-            decoded = []
-            for entry in s:
-                if (
-                    isinstance(entry, (list, tuple))
-                    and len(entry) == 2
-                ):
-                    decoded.append((_decode(entry[0]), _decode(entry[1])))
-                else:
-                    decoded.append((None, None))
-            out[m.name] = decoded
-        return out
-
-    def _prune_cells(self, cells):
-        """Drop grid cells PROVABLY empty under the pushed conjuncts —
-        planning-time pruning, zero chunk reads for excluded objects
-        (parquet row-group semantics; the dynamic per-chunk mask in
-        ``_load_cell`` still runs for the survivors). Two bound
-        sources compose:
-
-        - writer-recorded per-object [min, max] statistics (table
-          stores, axis 0);
-        - COORDINATE values read at planning (any store, any
-          dimensionality — the reference's own lat/lon flagship query
-          prunes its grid statically this way).
-
-        Conservative: a column without usable bounds, a None/NaN
-        bound, or an unreadable coordinate never prunes."""
-        if not self.predicates or not cells:
-            return cells
-        needed = {p.column for p in self.predicates}
-        # two bound shapes: per-cell-ordinal (writer stats, 1-D tables
-        # and N-D grids) and per-axis-index (coordinate values)
-        ordinal_bounds = self._stats_bounds(needed)
-        axis_bounds = self._coord_bounds(needed - set(ordinal_bounds))
-        preds = [
-            p
-            for p in self.predicates
-            if p.column in ordinal_bounds or p.column in axis_bounds
-        ]
-        # isnull is provably empty regardless of bounds (decoded zarr
-        # chunks never hold nulls) — but only prune on it when the
-        # column has bounds at all; mask() handles it dynamically anyway
-        if not preds:
-            return cells
-        kept = []
-        for cell in cells:
-            ok = True
-            for p in preds:
-                if p.column in ordinal_bounds:
-                    ordinal = self.plan.cell_ordinal(cell)
-                    lo, hi = ordinal_bounds[p.column][ordinal]
-                else:
-                    axis, blist = axis_bounds[p.column]
-                    lo, hi = blist[cell[axis]]
-                if not interval_possible(p, lo, hi):
-                    ok = False
-                    break
-            if ok:
-                kept.append(cell)
-        return kept
-
     # -- partitioning ----------------------------------------------------
 
     def partitions(self) -> Sequence[ZarrInputPartition]:
-        # the tier cutover is an option (plan_cells_max) so it reaches
-        # Spark's planning worker — tests force the span tier with 0,
-        # and a deployment can tune where explicit planning stops
+        """Plan the scan as contiguous C-order cell-ordinal spans (the
+        reference's contiguous chunk-grid split, A8,
+        ``zarr_data_stream.rs:782-817``) under one static-pruning test,
+        :meth:`_surviving`, whose only fork is WHERE it runs:
+
+        - grids of at most ``plan_cells_max`` cells (default
+          ``PLAN_DRIVER_CELLS_MAX``): on the driver, over every
+          ordinal — partitions carry only survivor runs, so pruned
+          cells cost no task;
+        - larger grids: in the tasks, so the driver never enumerates
+          cells (O(n_partitions) memory). The driver still pre-prunes
+          per AXIS from coordinate bounds (:meth:`_span_coord_runs`).
+
+        ``num_partitions`` ceil-splits the survivors with empty tails
+        (reference ``repartitioned()`` semantics); past the cap it
+        splits the FULL ordinal space, since survivors are unknown at
+        planning — partition boundaries differ, results don't."""
+        n = self.plan.n_cells
+        # an option, not only the constant, so it reaches Spark's
+        # planning worker — tests force task-side pruning with 0
         cap = int(
             self.options.get("plan_cells_max") or PLAN_DRIVER_CELLS_MAX
         )
-        if self.plan.n_cells > cap:
-            return self._partitions_spans()
+        prune_in_task = n > cap
         n_opt = self.options.get("num_partitions")
-        if n_opt:
-            # reference repartitioned() semantics (contiguous
-            # ceil(N/p) ranges, empty tails) over the SURVIVING cells
-            groups = self.plan.split_cells(
-                int(n_opt), self._prune_cells(self.plan.cells())
-            )
+        full = [(0, n)] if n else []
+        if not prune_in_task:
+            runs = self._survivor_runs(full)
+        elif n_opt:
+            runs = full
         else:
-            chunks_per_opt = self.options.get("chunks_per_partition")
-            cells = self._prune_cells(self.plan.cells())
-            if chunks_per_opt:
-                chunks_per = max(1, int(chunks_per_opt))
+            runs = self._span_coord_runs()
+            if runs is None:
+                runs = full
+        if n_opt:
+            groups = _pack_runs(runs, n, n_parts=max(1, int(n_opt)))
+        else:
+            kept = sum(e - s for s, e in runs)
+            groups = _pack_runs(runs, n, self._chunks_per_partition(kept))
+        grid = self.plan.grid_shape
+        return [ZarrInputPartition(g, grid, prune_in_task) for g in groups]
+
+    def _chunks_per_partition(self, n_kept: int) -> int:
+        """Cells per partition: the ``chunks_per_partition`` option, or
+        auto-grouping over the ``n_kept`` cells the scan will read."""
+        opt = self.options.get("chunks_per_partition")
+        if opt:
+            return max(1, int(opt))
+        # Auto-grouping: one tiny chunk per Spark task wastes a
+        # Python-worker round trip per chunk; one huge range starves
+        # the scheduler. Target ~64k rows per task — on a cluster,
+        # callers size explicitly via num_partitions or
+        # chunks_per_partition.
+        rows_per_cell = 1
+        for c in (
+            self.plan._rep.meta.chunk_shape
+            if self.plan.kind == "data"
+            else [a.meta.chunk_shape[0] for a in self.plan.arrays]
+        ):
+            rows_per_cell *= int(c)
+        per = max(1, 65536 // max(rows_per_cell, 1))
+        # floor of 1 partition per local core: each Python-DS task pays
+        # a worker round trip, so fewer/bigger partitions beat 2x-cores
+        # slack (measured 2x on the 512x512 bench store)
+        min_parts = os.cpu_count() or 8
+        if n_kept >= min_parts:
+            per = min(per, max(1, n_kept // min_parts))
+        return per
+
+    def _survivor_runs(self, spans) -> List[Tuple[int, int]]:
+        """The driver placement of the static-pruning test: ``spans``
+        reduced to maximal runs of surviving ordinals."""
+        sources = self._bound_sources(in_task=False)
+        if not any(p.column in sources for p in self.predicates):
+            return spans
+        runs: List[Tuple[int, int]] = []
+        for o, _cell in self._surviving(spans, sources):
+            if runs and runs[-1][1] == o:
+                runs[-1] = (runs[-1][0], o + 1)
             else:
-                # Auto-grouping: one tiny chunk per Spark task wastes a
-                # Python-worker round trip per chunk; one huge range
-                # starves the scheduler. Target ~64k rows per task but
-                # keep at least 2 partitions per local core so the
-                # scheduler (and AQE) has room — on a cluster, callers
-                # size explicitly via num_partitions/chunks_per_partition.
-                rows_per_cell = 1
-                for c in (
-                    self.plan._rep.meta.chunk_shape
-                    if self.plan.kind == "data"
-                    else [a.meta.chunk_shape[0] for a in self.plan.arrays]
-                ):
-                    rows_per_cell *= int(c)
-                chunks_per = max(1, 65536 // max(rows_per_cell, 1))
-                # floor of 1 partition per local core: each Python-DS
-                # task pays a worker round trip, so fewer/bigger
-                # partitions beat 2x-cores slack (measured 2x on the
-                # 512x512 bench store)
-                min_parts = os.cpu_count() or 8
-                if len(cells) >= min_parts:
-                    chunks_per = min(
-                        chunks_per, max(1, len(cells) // min_parts)
-                    )
-            groups = [
-                cells[i : i + chunks_per]
-                for i in range(0, len(cells), chunks_per)
-            ] or [[]]
-        return [ZarrInputPartition(g) for g in groups]
+                runs.append((o, o + 1))
+        return runs
 
-    def _partitions_spans(self) -> Sequence[ZarrInputPartition]:
-        """The past-cap planning tier (r11): O(n_partitions) driver
-        memory however large the chunk grid. Partitions carry
-        contiguous cell-ordinal spans; cells enumerate from mixed-
-        radix arithmetic in the tasks, and static pruning (the
-        explicit tier's planning-time step) runs executor-side in
-        :meth:`_span_cells` — distributed, against worker-cached
-        bounds, with identical ``interval_possible`` semantics.
-        Since r12 a driver-side COORDINATE pre-prune
-        (:meth:`_span_coord_runs` — per-axis bounds, O(chunks per
-        axis), bounded run enumeration) shrinks the spans themselves
-        when predicates hit coordinate columns, so a mostly-pruned
-        scan schedules survivor tasks instead of no-op tasks; writer
-        stats still prune only in the tasks.
-        ``num_partitions`` keeps the contiguous ceil(N/p) split, over
-        the FULL ordinal space (survivors aren't known at planning in
-        this tier — a documented boundary difference; results are
-        identical because pruned cells are provably empty)."""
-        n = self.plan.n_cells
-        n_opt = self.options.get("num_partitions")
-        if n_opt:
-            n_parts = max(1, int(n_opt))
-            per = -(-n // n_parts)
-            return [
-                ZarrInputPartition(
-                    None,
-                    spans=(
-                        [(i * per, min((i + 1) * per, n))]
-                        if i * per < n
-                        else []
-                    ),
-                )
-                for i in range(n_parts)
-            ]
-        chunks_per_opt = self.options.get("chunks_per_partition")
-        if chunks_per_opt:
-            chunks_per = max(1, int(chunks_per_opt))
-        else:
-            rows_per_cell = 1
-            for c in (
-                self.plan._rep.meta.chunk_shape
-                if self.plan.kind == "data"
-                else [a.meta.chunk_shape[0] for a in self.plan.arrays]
-            ):
-                rows_per_cell *= int(c)
-            chunks_per = max(1, 65536 // max(rows_per_cell, 1))
-        runs = self._span_coord_runs()
-        # r13 (verdict item 6 — the span pair's measured ~2x wall
-        # gap): the explicit tier floors its auto-grouping at one
-        # partition per local core; the span tier was missing the
-        # same floor, so a small-grid scan packed ~64Ki rows per task
-        # and left most cores idle. Floor on the SURVIVOR count when
-        # the pre-prune ran (n_surv is already known then), else on
-        # the full grid; the SPAN_PARTITIONS_MAX clamp is re-applied
-        # LAST so a billion-cell grid still caps the task count.
-        if not chunks_per_opt:  # auto-grouping only, like the
-            # explicit tier (an explicit chunks_per_partition wins)
-            min_parts = os.cpu_count() or 8
-            n_floor = (
-                sum(e - s for s, e in runs) if runs is not None else n
-            )
-            if n_floor >= min_parts:
-                chunks_per = min(
-                    chunks_per, max(1, n_floor // min_parts)
-                )
-        chunks_per = max(chunks_per, -(-n // SPAN_PARTITIONS_MAX))
-        if runs is not None:
-            # driver-side coordinate PRE-PRUNE (r12): pack the
-            # surviving ordinal runs into ~chunks_per-cell partitions.
-            # Survivor count <= n, so the partition count stays under
-            # SPAN_PARTITIONS_MAX with the same chunks_per.
-            parts: List[List[Tuple[int, int]]] = []
-            cur: List[Tuple[int, int]] = []
-            cur_n = 0
-            for s, e in runs:
-                while s < e:
-                    take = min(e - s, chunks_per - cur_n)
-                    cur.append((s, s + take))
-                    cur_n += take
-                    s += take
-                    if cur_n >= chunks_per:
-                        parts.append(cur)
-                        cur, cur_n = [], 0
-            if cur:
-                parts.append(cur)
-            if not parts:
-                parts = [[]]
-            return [ZarrInputPartition(None, spans=p) for p in parts]
-        return [
-            ZarrInputPartition(
-                None, spans=[(s, min(s + chunks_per, n))]
-            )
-            for s in range(0, n, chunks_per)
-        ]
-
-    #: span-tier pre-prune budget: the driver enumerates at most this
+    #: past-cap pre-prune budget: the driver enumerates at most this
     #: many surviving ordinal RUNS (outer-lattice combos x last-axis
     #: sub-runs) before falling back to unpruned full-range spans —
-    #: the bound that keeps span planning O(n_partitions + runs), not
-    #: O(n_cells), on any grid.
+    #: the bound that keeps past-cap planning O(n_partitions + runs),
+    #: not O(n_cells), on any grid.
     SPAN_PRUNE_RUNS_MAX = 1 << 16
 
     def _span_coord_runs(self):
-        """Driver-side coordinate pre-pruning for the span tier
+        """Driver-side coordinate pre-pruning for grids past the cap
         (r12): per-AXIS surviving grid-index sets from the SAME
-        ``_coord_bounds`` + ``interval_possible`` tests the explicit
-        tier and the executor-side span pruning use, composed into
-        contiguous C-order ordinal runs WITHOUT enumerating cells.
+        ``_coord_bounds`` + ``interval_possible`` tests the per-cell
+        :meth:`_surviving` pass uses, composed into contiguous C-order
+        ordinal runs WITHOUT enumerating cells.
 
         Legitimate under the no-O(n_cells)-driver-terms rule because
         coordinate bounds are per-axis — O(chunks per axis), the
         "axes ARE the metadata" class (and ``_coord_bounds`` is
         already capped at 1M elements per axis). Writer STATS remain
-        executor-side: their per-cell bound lists are exactly the
-        O(n_cells) artifact this tier exists to keep off the driver.
+        task-side past the cap: their per-cell bound lists are exactly
+        the O(n_cells) artifact the cap exists to keep off the driver.
 
         Returns ``None`` when nothing prunes (no predicates, no
         usable coordinate bounds, or the run enumeration would exceed
         ``SPAN_PRUNE_RUNS_MAX``) — callers then plan unpruned spans,
-        and the executor-side pass still skips the I/O. A pruned cell
-        here is pruned by the SAME test the executor pass applies, so
+        and the task-side pass still skips the I/O. A pruned cell
+        here is pruned by the SAME test the task-side pass applies, so
         results are identical either way. Returns ``[]`` for a
         provably empty scan."""
         if not self.predicates:
@@ -857,7 +739,7 @@ class ZarrReader(DataSourceReader):
             return None
         grid = list(self.plan.grid_shape)
         nd = len(grid)
-        # lazy ranges, NOT list(range(g)): on a skewed span-tier grid
+        # lazy ranges, NOT list(range(g)): on a skewed past-cap grid
         # (e.g. 16M x 4 chunks with a predicate on the small axis)
         # materializing every axis would be an O(n_cells)-class
         # driver list — only axes that actually have coordinate
@@ -881,18 +763,27 @@ class ZarrReader(DataSourceReader):
             return None
         return _lattice_runs(keep, grid, self.SPAN_PRUNE_RUNS_MAX)
 
-    def _span_bound_sources(self) -> Dict[str, object]:
-        """Per-predicate-column bound accessors for the span tier's
-        EXECUTOR-side static pruning — the distributed analogue of
-        the planning tier's ``_stats_bounds`` + ``_coord_bounds``
-        with identical validation: stats must match the live plan
-        grid (stale ignored), torn/malformed entries degrade to
-        unknown, over-cap coordinates don't prune. Each accessor maps
-        (ordinal, cell) -> (lo, hi); heavy artifacts (decoded sidecar
-        blocks, coordinate bound lists) are worker-cached by the scan
-        token so tasks share them."""
-        from .zarr.stats import block_key, is_sidecar_marker
+    def _bound_sources(self, in_task: bool) -> Dict[str, object]:
+        """Per-predicate-column bound accessors, each mapping
+        (ordinal, cell) -> (lo, hi), for :meth:`_surviving`. Two bound
+        sources compose:
 
+        - writer-recorded per-object [min, max] statistics
+          (``STATS_ATTR_KEY``), indexed by the C-order cell ordinal —
+          1-D table stores and N-D grid stores alike. Trusted only
+          when they match the live plan grid (stale stats never
+          prune); malformed entries degrade to unknown.
+        - COORDINATE values read at planning (:meth:`_coord_bounds`),
+          indexed by the cell's axis position — any store, so the
+          reference's own lat/lon query prunes statically too.
+
+        Sidecar statistics load per placement. The driver pass
+        (``in_task=False``) needs every block, so it fetches them
+        concurrently through ``resolve_stats``, and one torn block
+        leaves the whole column unknown. A task loads only the blocks
+        its spans touch, and a torn block is unknown for its own
+        cells. Task-side blocks and coordinate bound lists are
+        worker-cached by the scan token so tasks share them."""
         needed = {p.column for p in self.predicates}
         plan_grid = tuple(self.plan.grid_shape)
         n_cells = self.plan.n_cells
@@ -910,6 +801,20 @@ class ZarrReader(DataSourceReader):
             unit = None
             if m.zarr_dtype.startswith("numpy.datetime64["):
                 unit = m.zarr_dtype[len("numpy.datetime64[") : -1]
+            sidecar = False
+            if isinstance(s, dict):
+                # imported only for a possible sidecar marker: a fresh
+                # planning worker would otherwise compile it every scan
+                from .zarr.stats import (
+                    is_sidecar_marker,
+                    load_block,
+                    resolve_stats,
+                )
+
+                sidecar = is_sidecar_marker(s) and s["n_entries"] == n_cells
+                if sidecar and not in_task:
+                    # a torn block resolves the whole column to None
+                    s, sidecar = resolve_stats(a.store, m.name, s), False
             if isinstance(s, list):
                 if len(s) != n_cells:
                     continue  # stale inline stats: never trusted
@@ -918,34 +823,20 @@ class ZarrReader(DataSourceReader):
                     return _entry_bounds(_entries[o], _u)
 
                 sources[m.name] = _inline
-            elif is_sidecar_marker(s) and s.get("n_entries") == n_cells:
+            elif sidecar:
                 be = int(s["block_entries"])
-                store = a.store
-                name = m.name
-
-                def _load_block(
-                    b, _store=store, _name=name
-                ):
-                    raw = _store.get(block_key(_name, b))
-                    if raw is None:
-                        return None  # torn sidecar: unknown
-                    try:
-                        part = json.loads(raw)
-                    except ValueError:
-                        return None
-                    return part if isinstance(part, list) else None
 
                 def _sidecar(
-                    o, _cell, _be=be, _name=name, _u=unit,
-                    _load=_load_block,
+                    o, _cell, _be=be, _store=a.store, _name=m.name,
+                    _u=unit,
                 ):
                     b = o // _be
                     blk = _span_cached(
                         (token, "stats", _name, b),
-                        lambda: _load(b),
+                        lambda: load_block(_store, _name, b),
                     )
                     if blk is None:
-                        return (None, None)
+                        return (None, None)  # torn sidecar: unknown
                     i = o - b * _be
                     if i >= len(blk):
                         return (None, None)
@@ -969,20 +860,21 @@ class ZarrReader(DataSourceReader):
             sources[nm] = _coord
         return sources
 
-    def _span_cells(self, spans) -> Iterator[Tuple[int, ...]]:
-        """Enumerate a span partition's surviving cells: mixed-radix
-        ordinal decode plus the SAME ``interval_possible`` static
-        pruning the explicit tier runs at planning — here it runs in
-        the task, so a billion-cell scan's pruning distributes and
-        the driver never holds bounds or cells."""
-        plan = self.plan
-        sources = (
-            self._span_bound_sources() if self.predicates else {}
-        )
+    def _surviving(
+        self, spans, sources
+    ) -> Iterator[Tuple[int, Tuple[int, ...]]]:
+        """(ordinal, cell) for every cell of ``spans`` that the pushed
+        conjuncts might match under ``sources``' bounds — the scan's one
+        static-pruning test, run on the driver or in the task (see
+        :meth:`partitions`). Zero chunk reads for excluded cells
+        (parquet row-group semantics); the per-chunk row mask in
+        :meth:`_load_cell` still runs for survivors. Conservative: a
+        column without bounds, or a None/NaN bound, never prunes."""
+        cell_of = self.plan.cell_of_ordinal
         preds = [p for p in self.predicates if p.column in sources]
         for start, stop in spans:
             for o in range(int(start), int(stop)):
-                cell = plan.cell_of_ordinal(o)
+                cell = cell_of(o)
                 ok = True
                 for p in preds:
                     lo, hi = sources[p.column](o, cell)
@@ -990,7 +882,18 @@ class ZarrReader(DataSourceReader):
                         ok = False
                         break
                 if ok:
-                    yield cell
+                    yield o, cell
+
+    def _partition_cells(
+        self, partition: ZarrInputPartition
+    ) -> Iterator[Tuple[int, ...]]:
+        """The cells :meth:`read` loads for ``partition``: its spans in
+        order, through the static-pruning test when the planner left
+        that to the task."""
+        sources = self._bound_sources(in_task=True) if partition.prune else {}
+        return (
+            cell for _o, cell in self._surviving(partition.spans, sources)
+        )
 
     # -- execution -------------------------------------------------------
 
@@ -1050,18 +953,8 @@ class ZarrReader(DataSourceReader):
         per-batch ingestion than the copies here (one chunk still never
         splits across batches, preserving the reference's chunk-order
         row layout)."""
-        spans = getattr(partition, "spans", None)
-        if spans is None:
-            if not partition.cells:
-                return
-            cell_seq = iter(partition.cells)
-        else:
-            # span tier: cells enumerate (and statically prune) here,
-            # in the task — the driver shipped only ordinal ranges
-            cell_seq = self._span_cells(spans)
-
         def cell_results():
-            it = cell_seq
+            it = self._partition_cells(partition)
             first = next(it, None)
             if first is None:
                 return

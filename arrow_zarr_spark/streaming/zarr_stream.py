@@ -74,33 +74,13 @@ class ZarrStreamReader(SimpleDataSourceStreamReader):
         self.path = path
 
     def _arrays(self):
-        arrays = infer_store_arrays(open_store(self.path))
-        for a in arrays:
-            if a.meta.ndim != 1:
-                raise ZarrFormatError(
-                    "zarr streaming source supports 1-D stores (the "
-                    "writer's layout); got "
-                    f"{a.meta.ndim}-D array {a.meta.name!r}"
-                )
-        return arrays
+        return _validate_1d(infer_store_arrays(open_store(self.path)))
 
     def initialOffset(self) -> dict:
         return {"row": 0}
 
     def _read_range(self, start: int, end: int):
-        arrays = self._arrays()
-        names = [a.meta.name for a in arrays]
-        cols = []
-        for a in arrays:
-            chunk = a.meta.chunk_shape[0]
-            vals = []
-            c0, c1 = start // chunk, (end - 1) // chunk if end > start else -1
-            for ci in range(c0, c1 + 1):
-                block = a.read_chunk((ci,))
-                lo = max(start - ci * chunk, 0)
-                hi = min(end - ci * chunk, len(block))
-                vals.extend(block[lo:hi].tolist())
-            cols.append(vals)
+        cols = _read_row_range(self.path, start, end)
         # a list_iterator, not a generator: the prefetch wrapper both
         # calls next() on it and pickles it for replay caching, and
         # generators don't pickle

@@ -47,6 +47,7 @@ __all__ = [
     "delete_sidecar",
     "is_sidecar_marker",
     "iter_stats_blocks",
+    "load_block",
     "resolve_stats",
     "store_stats",
 ]
@@ -78,6 +79,20 @@ def is_sidecar_marker(value) -> bool:
         and isinstance(value.get("block_entries"), int)
         and value["block_entries"] > 0
     )
+
+
+def load_block(store: Store, array_name: str, block: int) -> Optional[List]:
+    """One decoded sidecar block, or None when it is missing, not JSON,
+    or not a list — the one block reader behind every stats consumer
+    (callers treat None as "stats unknown")."""
+    raw = store.get(_block_key(array_name, block))
+    if raw is None:
+        return None
+    try:
+        part = json.loads(raw)
+    except ValueError:
+        return None
+    return part if isinstance(part, list) else None
 
 
 def delete_sidecar(store: Store, array_name: str) -> None:
@@ -143,19 +158,10 @@ def iter_stats_blocks(store: Store, array_name: str, marker):
         yield None
         return
     for b in range(marker["sidecar"]):
-        raw = store.get(_block_key(array_name, b))
-        if raw is None:
-            yield None
-            return
-        try:
-            part = json.loads(raw)
-        except ValueError:
-            yield None
-            return
-        if not isinstance(part, list):
-            yield None
-            return
+        part = load_block(store, array_name, b)
         yield part
+        if part is None:
+            return
 
 
 def resolve_stats(store: Store, array_name: str, value) -> Optional[List]:
@@ -177,26 +183,20 @@ def resolve_stats(store: Store, array_name: str, value) -> Optional[List]:
     n_entries = value["n_entries"]
 
     def fetch(b: int):
-        return store.get(_block_key(array_name, b))
+        return load_block(store, array_name, b)
 
     if n_blocks > 4:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=8) as pool:
-            raws = list(pool.map(fetch, range(n_blocks)))
+            parts = list(pool.map(fetch, range(n_blocks)))
     else:
-        raws = [fetch(b) for b in range(n_blocks)]
+        parts = [fetch(b) for b in range(n_blocks)]
 
     out: List = []
-    for raw in raws:
-        if raw is None:
+    for part in parts:
+        if part is None:
             return None  # torn sidecar: unknown, never wrong
-        try:
-            part = json.loads(raw)
-        except ValueError:
-            return None
-        if not isinstance(part, list):
-            return None
         out.extend(part)
     if len(out) != n_entries:
         return None  # stale marker vs blocks: refuse the prefix

@@ -32,7 +32,17 @@ import numpy as np
 from .array import ZarrArray
 from .meta import ZarrFormatError
 
-__all__ = ["ChunkPlan"]
+__all__ = ["ChunkPlan", "ordinal_to_cell"]
+
+
+def ordinal_to_cell(ordinal: int, grid: Sequence[int]) -> Tuple[int, ...]:
+    """Mixed-radix decode of a C-order cell ordinal on ``grid``."""
+    out = []
+    rem = int(ordinal)
+    for g in reversed(grid):
+        out.append(rem % g)
+        rem //= g
+    return tuple(reversed(out))
 
 
 class _CoordEntry:
@@ -172,35 +182,11 @@ class ChunkPlan:
         return ordinal
 
     def cell_of_ordinal(self, ordinal: int) -> Tuple[int, ...]:
-        """Inverse of :meth:`cell_ordinal` — the span-partition scan
-        tier (datasource.py, r11) enumerates cells from contiguous
-        ordinal ranges so a huge grid's planning never materializes
-        the cell list."""
-        out = []
-        rem = int(ordinal)
-        for g in reversed(self.grid_shape):
-            out.append(rem % g)
-            rem //= g
-        return tuple(reversed(out))
-
-    def split_cells(
-        self,
-        n_partitions: int,
-        cells: Optional[List[Tuple[int, ...]]] = None,
-    ) -> List[List[Tuple[int, ...]]]:
-        """Contiguous ``ceil(N/p)``-sized ranges; trailing partitions may be
-        empty — mirrors ``zarr_data_stream.rs:805-817`` and the
-        over-partition test (1328-1363). ``cells`` overrides the full
-        grid (the statistics-pruned survivor list splits with the same
-        semantics)."""
-        if cells is None:
-            cells = self.cells()
-        per = -(-len(cells) // n_partitions) if cells else 0
-        if per == 0:
-            return [[] for _ in range(n_partitions)]
-        return [
-            cells[i * per : (i + 1) * per] for i in range(n_partitions)
-        ]
+        """Inverse of :meth:`cell_ordinal` — scan partitions
+        (datasource.py) carry contiguous ordinal spans, and tasks
+        enumerate cells from them, so planning a huge grid never
+        materializes the cell list."""
+        return ordinal_to_cell(ordinal, self.grid_shape)
 
     # -- evaluation ------------------------------------------------------
 

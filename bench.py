@@ -548,13 +548,14 @@ def bench_queries(spark):
     qs["zarr_coord_filter_static"] = lambda: _coord_filter(True)
     qs["zarr_coord_filter_dynamic"] = lambda: _coord_filter(False)
 
-    # span-tier trio (r12, VERDICT r11 item 2 — "the one scale claim
-    # without a number"): the same scans with plan_cells_max=0 forcing
-    # the r11 SPAN partition tier (datasource.py:642 _partitions_spans
-    # — O(n_partitions) driver memory, cells from mixed-radix
-    # arithmetic in tasks) so span planning and the EXECUTOR-side
-    # static pruning (datasource.py:690 _span_bound_sources, worker-
-    # cached bounds) get numbers against their explicit-tier twins:
+    # span trio (r12, VERDICT r11 item 2 — "the one scale claim
+    # without a number"): the same scans with plan_cells_max=0 moving
+    # static pruning from the driver into the tasks
+    # (datasource.py ZarrReader.partitions — O(n_partitions) driver
+    # memory, cells from mixed-radix arithmetic in tasks, the same
+    # _surviving test against worker-cached bounds) so task-side
+    # planning and pruning get numbers against their driver-pruned
+    # twins:
     #   zarr_span_full_scan    vs zarr_full_scan
     #   zarr_span_stats_pruned vs zarr_stats_filter_pruned
     #   zarr_span_coord_pruned vs zarr_coord_filter_static
@@ -582,7 +583,7 @@ def bench_queries(spark):
     # (no read ever happens — absent chunks are fill and the thunk
     # only calls partitions()): the O(n_partitions) planning claim as
     # a recorded number. 16.8M cells at chunk_rows=1 plan as 256
-    # spans; an explicit-tier enumeration of 16.8M cells would take
+    # spans; a driver-side enumeration of 16.8M cells would take
     # seconds and ~GBs.
     _decl_path = fixtures.write_declared_span_store()
 

@@ -773,3 +773,53 @@ def test_span_ordinal_arithmetic_properties(grid, chunks_per):
     ]
     covered = [o for s, e in spans for o in range(s, e)]
     assert covered == list(range(n))
+
+
+@st.composite
+def sorted_disjoint_runs(draw):
+    n_cells = draw(st.integers(0, 300))
+    bounds = sorted(
+        draw(st.sets(st.integers(0, n_cells), max_size=24))
+    )
+    runs = list(zip(bounds[0::2], bounds[1::2]))
+    return n_cells, runs
+
+
+@given(
+    grid_runs=sorted_disjoint_runs(),
+    by_count=st.booleans(),
+    knob=st.integers(1, 40),
+    parts_max=st.integers(1, 50),
+)
+@settings(max_examples=200, deadline=None)
+def test_pack_runs_properties(grid_runs, by_count, knob, parts_max):
+    """The scan's one grouping policy (datasource._pack_runs), with
+    either chunks_per or num_partitions: partitions concatenate back
+    to the input ordinals in order and hold at most ``per`` cells;
+    num_partitions gives exactly p ceil-sized partitions with empty
+    tails; chunks_per never exceeds SPAN_PARTITIONS_MAX partitions."""
+    from unittest import mock
+
+    from arrow_zarr_spark import datasource as ds
+
+    n_cells, runs = grid_runs
+    total = sum(e - s for s, e in runs)
+    with mock.patch.object(ds, "SPAN_PARTITIONS_MAX", parts_max):
+        if by_count:
+            parts = ds._pack_runs(runs, n_cells, n_parts=knob)
+        else:
+            parts = ds._pack_runs(runs, n_cells, chunks_per=knob)
+    ordinals = [o for s, e in runs for o in range(s, e)]
+    assert [o for p in parts for s, e in p for o in range(s, e)] == ordinals
+    assert all(s < e for p in parts for s, e in p)
+    sizes = [sum(e - s for s, e in p) for p in parts]
+    if by_count:
+        per = max(1, -(-total // knob))
+        assert len(parts) == knob
+        assert sizes == [
+            min(per, max(0, total - i * per)) for i in range(knob)
+        ]
+    else:
+        per = max(knob, -(-n_cells // parts_max))
+        assert len(parts) <= parts_max
+        assert all(n == per for n in sizes[:-1]) and sizes[-1] <= per

@@ -1,11 +1,11 @@
-"""r11: the span-partition scan tier (datasource.py) — past
+"""Task-side static pruning (datasource.py) — past
 PLAN_DRIVER_CELLS_MAX (or the plan_cells_max option) the planner never
 materializes the cell list: partitions carry contiguous cell-ordinal
 SPANS (O(n_partitions) driver memory however large the grid) and the
-explicit tier's planning-time static pruning runs EXECUTOR-side per
-task, against worker-cached bounds, with identical interval_possible
-semantics. These tests force the tier with a cap of 0 and pin span ==
-explicit on rows, pruning decisions, and split semantics."""
+static-pruning test the driver runs on smaller grids runs in each
+task instead, against worker-cached bounds. These tests force that
+placement with a cap of 0 and pin task-pruned == driver-pruned on
+rows, pruning decisions, and split semantics."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,20 +24,20 @@ def _reader(path, filters=(), **options):
     return reader
 
 
-def _span_surviving_cells(reader):
-    """Every cell the span tier would actually read, across all its
-    partitions (executor-side pruning included)."""
+def _task_pruned_cells(reader):
+    """Every cell a task-pruned plan would actually read, across all
+    its partitions (task-side pruning included)."""
     out = []
     for p in reader.partitions():
-        assert p.cells is None and p.spans is not None
-        out.extend(reader._span_cells(p.spans))
+        assert p.prune and p.cells is None
+        out.extend(reader._partition_cells(p))
     return out
 
 
-def _explicit_surviving_cells(reader):
+def _driver_pruned_cells(reader):
     out = []
     for p in reader.partitions():
-        assert p.spans is None
+        assert not p.prune
         out.extend(p.cells)
     return out
 
@@ -61,9 +61,9 @@ class TestCellOfOrdinal:
 
 
 class TestSpanPruningMatchesPlanning:
-    """The executor-side static prune must keep EXACTLY the cells the
-    explicit tier's planning-time prune keeps — same bound sources,
-    same validation, same conservatism."""
+    """The task-side static prune must keep EXACTLY the cells the
+    driver-side prune keeps — same bound sources, same validation,
+    same conservatism."""
 
     def test_inline_stats(self, spark, tmp_path):
         path = str(tmp_path / "sp1")
@@ -75,8 +75,8 @@ class TestSpanPruningMatchesPlanning:
             [GreaterThan(("k",), 149), LessThan(("k",), 350)],
             [EqualTo(("k",), 555)],
         ):
-            want = _explicit_surviving_cells(_reader(path, filters))
-            got = _span_surviving_cells(
+            want = _driver_pruned_cells(_reader(path, filters))
+            got = _task_pruned_cells(
                 _reader(path, filters, plan_cells_max="0")
             )
             assert got == want, filters
@@ -92,11 +92,34 @@ class TestSpanPruningMatchesPlanning:
         meta = infer_store_arrays(open_store(path))[0].meta
         assert is_sidecar_marker(meta.attributes["arrow_zarr_spark:chunk_stats"])
         for filters in ([LessThan(("k",), 250)], [EqualTo(("k",), 999)]):
-            want = _explicit_surviving_cells(_reader(path, filters))
-            got = _span_surviving_cells(
+            want = _driver_pruned_cells(_reader(path, filters))
+            got = _task_pruned_cells(
                 _reader(path, filters, plan_cells_max="0")
             )
             assert got == want and 0 < len(got) < 10, filters
+
+    def test_torn_sidecar_never_prunes_rows(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A missing sidecar block must never prune a cell with rows:
+        the driver pass drops the whole column, a task only the torn
+        block's cells."""
+        import arrow_zarr_spark.io as io_mod
+        import arrow_zarr_spark.zarr.stats as stats_mod
+
+        monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
+        monkeypatch.setattr(stats_mod, "STATS_BLOCK_ENTRIES", 4)
+        path = str(tmp_path / "sp_torn")
+        df = spark.range(0, 1000, 1, 4).select(F.col("id").alias("k"))
+        write_zarr(df, path, chunk_rows=100)  # 10 objects, 3 blocks
+        open_store(path).delete(stats_mod.block_key("k", 0))
+        filters = [LessThan(("k",), 250)]  # rows in cells 0-2 only
+        assert _driver_pruned_cells(_reader(path, filters)) == [
+            (i,) for i in range(10)
+        ]
+        assert _task_pruned_cells(
+            _reader(path, filters, plan_cells_max="0")
+        ) == [(i,) for i in range(4)]
 
     def test_coordinate_bounds_on_grid(self, spark, tmp_path):
         import numpy as np
@@ -117,8 +140,8 @@ class TestSpanPruningMatchesPlanning:
             },
         )
         filters = [LessThan(("lat",), 12.0), GreaterThan(("lon",), 104.5)]
-        want = _explicit_surviving_cells(_reader(path, filters))
-        got = _span_surviving_cells(
+        want = _driver_pruned_cells(_reader(path, filters))
+        got = _task_pruned_cells(
             _reader(path, filters, plan_cells_max="0")
         )
         assert got == want and 0 < len(got) < 12
@@ -137,8 +160,8 @@ class TestSpanPruningMatchesPlanning:
 
         cut = datetime.datetime(2024, 1, 1, 2, 0, 0)
         filters = [LessThan(("ts",), cut)]
-        want = _explicit_surviving_cells(_reader(path, filters))
-        got = _span_surviving_cells(
+        want = _driver_pruned_cells(_reader(path, filters))
+        got = _task_pruned_cells(
             _reader(path, filters, plan_cells_max="0")
         )
         assert got == want and 0 < len(got) < 4
@@ -163,8 +186,8 @@ class TestSpanPruningMatchesPlanning:
         ] = [[0, 1]]
         store.set("zarr.json", json.dumps(root).encode())
         filters = [LessThan(("k",), 50)]
-        want = _explicit_surviving_cells(_reader(path, filters))
-        got = _span_surviving_cells(
+        want = _driver_pruned_cells(_reader(path, filters))
+        got = _task_pruned_cells(
             _reader(path, filters, plan_cells_max="0")
         )
         assert got == want == [(i,) for i in range(6)]  # kept: stale
@@ -216,8 +239,9 @@ class TestSpanSplitSemantics:
 
 class TestSpanEndToEnd:
     """Through the real spark.read path: the plan_cells_max option
-    reaches the planning worker, so the span tier drives the whole
-    scan — rows must equal the explicit tier's, filtered and not."""
+    reaches the planning worker, so task-side pruning drives the
+    whole scan — rows must equal the driver-pruned scan's, filtered
+    and not."""
 
     def test_table_scan_rows_match(self, spark, tmp_path):
         path = str(tmp_path / "se1")
@@ -362,13 +386,13 @@ class TestDefaultCutoverEngages:
         reader = _reader(path)  # no plan_cells_max option
         parts = reader.partitions()
         dt = time.perf_counter() - t0
-        assert all(p.cells is None and p.spans is not None for p in parts)
+        assert all(p.prune and p.cells is None for p in parts)
         assert len(parts) <= SPAN_PARTITIONS_MAX
         assert (
             sum(e - s for p in parts for s, e in p.spans) == n_declared
         )
         # planning a 5M-cell grid must stay metadata-priced: the
-        # explicit tier's 5M-tuple enumeration took seconds and
+        # driver enumeration of 5M cell tuples took seconds and
         # hundreds of MB; spans are sub-second
         assert dt < 5.0
         # the first cells still read correctly through a span task
@@ -376,7 +400,7 @@ class TestDefaultCutoverEngages:
         sub = [(0, 4)]
         rows = []
         for batch in reader.read(
-            type(first)(None, spans=sub)
+            type(first)(sub, first.grid, prune=True)
         ):
             rows.extend(batch.column(0).to_pylist())
         assert rows == [0, 1, 2, 3]
@@ -388,7 +412,7 @@ class TestSpanCoordPrePrune:
     _coord_bounds + interval_possible tests, composed into bounded
     ordinal runs. Legitimate under the no-O(n_cells) rule (bounds are
     per-axis); writer stats stay executor-side. Partitions shrink,
-    results stay identical to the explicit tier."""
+    results stay identical to the driver-pruned plan."""
 
     def _grid(self, tmp_path, name="pp"):
         import numpy as np
@@ -419,13 +443,13 @@ class TestSpanCoordPrePrune:
         pruned = _reader(
             path, filters, plan_cells_max="0", chunks_per_partition="4"
         )
-        explicit = _reader(path, filters)
+        driver = _reader(path, filters)
         n_unpruned = len(unfiltered.partitions())
         parts = pruned.partitions()
         # 8x8 grid, lat chunk 0 survives -> 8 cells in 2 partitions
         assert len(parts) == 2 < n_unpruned == 16
-        assert sorted(_span_surviving_cells(pruned)) == sorted(
-            _explicit_surviving_cells(explicit)
+        assert sorted(_task_pruned_cells(pruned)) == sorted(
+            _driver_pruned_cells(driver)
         )
 
     def test_two_axis_box_rows_match_end_to_end(self, spark, tmp_path):
@@ -462,8 +486,8 @@ class TestSpanCoordPrePrune:
         # over budget: full-range spans (the unpruned count)...
         assert len(fallback.partitions()) == 16
         # ...but the executor-side pass still prunes identically
-        assert sorted(_span_surviving_cells(fallback)) == sorted(
-            _explicit_surviving_cells(_reader(path, filters))
+        assert sorted(_task_pruned_cells(fallback)) == sorted(
+            _driver_pruned_cells(_reader(path, filters))
         )
 
     def test_provably_empty_scan(self, spark, tmp_path):
@@ -472,7 +496,7 @@ class TestSpanCoordPrePrune:
         pruned = _reader(path, filters, plan_cells_max="0")
         parts = pruned.partitions()
         assert len(parts) == 1 and parts[0].spans == []
-        assert _span_surviving_cells(pruned) == []
+        assert _task_pruned_cells(pruned) == []
 
     def test_stats_never_preprune(self, spark, tmp_path):
         """A 1-D table store's writer stats must NOT shrink the span
@@ -489,8 +513,8 @@ class TestSpanCoordPrePrune:
             path, plan_cells_max="0", chunks_per_partition="2"
         )
         assert len(pruned.partitions()) == len(unfiltered.partitions())
-        assert sorted(_span_surviving_cells(pruned)) == sorted(
-            _explicit_surviving_cells(_reader(path, filters))
+        assert sorted(_task_pruned_cells(pruned)) == sorted(
+            _driver_pruned_cells(_reader(path, filters))
         )
 
     def test_num_partitions_boundary_unchanged(self, spark, tmp_path):
@@ -692,7 +716,7 @@ class TestLatticeRuns:
 class TestSpanPrePruneDims:
     """The pre-prune across plan kinds and dimensionalities: a 3-D
     data grid and an all-coords Cartesian plan must pre-prune
-    identically to the explicit tier."""
+    identically to the driver-side prune."""
 
     def test_3d_grid(self, spark, tmp_path):
         import numpy as np
@@ -724,8 +748,8 @@ class TestSpanPrePruneDims:
         parts = pruned.partitions()
         # 1 x 4 x 1 = 4 surviving cells in 2 partitions
         assert len(parts) == 2
-        assert sorted(_span_surviving_cells(pruned)) == sorted(
-            _explicit_surviving_cells(_reader(path, filters))
+        assert sorted(_task_pruned_cells(pruned)) == sorted(
+            _driver_pruned_cells(_reader(path, filters))
         )
         pred = "x < 4 AND z > 11"
         want = sorted(
@@ -756,8 +780,8 @@ class TestSpanPrePruneDims:
         )
         filters = [GreaterThan(("a",), 8.0)]  # a chunks 2(partial),3
         pruned = _reader(path, filters, plan_cells_max="0")
-        assert sorted(_span_surviving_cells(pruned)) == sorted(
-            _explicit_surviving_cells(_reader(path, filters))
+        assert sorted(_task_pruned_cells(pruned)) == sorted(
+            _driver_pruned_cells(_reader(path, filters))
         )
         pred = "a > 8"
         want = sorted(

@@ -116,15 +116,22 @@ class TestF4MixedDims:
 class TestPartitionSplit:
     """reference: zarr_data_stream.rs:1280-1363."""
 
+    @staticmethod
+    def _splits(n_partitions):
+        from arrow_zarr_spark.datasource import ZarrDataSource
+
+        ds = ZarrDataSource(
+            {"path": write_lat_lon_store(), "num_partitions": n_partitions}
+        )
+        return [p.cells for p in ds.reader(ds.schema()).partitions()]
+
     def test_two_way(self):
-        plan = _plan(write_lat_lon_store())
-        splits = plan.split_cells(2)
+        splits = self._splits("2")
         assert [len(s) for s in splits] == [5, 4]
         assert splits[1][0] == (1, 2)  # partition 1 starts mid-grid
 
     def test_over_partition(self):
-        plan = _plan(write_lat_lon_store())
-        splits = plan.split_cells(20)
+        splits = self._splits("20")
         assert len(splits) == 20
         assert sum(len(s) for s in splits) == 9
         assert all(len(s) == 0 for s in splits[9:])
