@@ -9,6 +9,9 @@ relational operator, plus a large-scale data-pipeline operator library
 reference does not have.
 """
 
+# First, so every Spark worker that unpickles anything of this package
+# stops re-reading unchanged zip archives on each call (see _zipguard).
+from . import _zipguard  # noqa: F401
 from .datasource import ZarrDataSource, read_zarr, read_zarr_many, register
 from .pruning import zarr_sql
 
