@@ -42,7 +42,7 @@ from __future__ import annotations
 import json
 import math
 import os
-import warnings
+from contextlib import contextmanager
 from typing import Any, Dict, Iterator, List, Optional, Sequence
 
 import numpy as np
@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .zarr.meta import STATS_ATTR_KEY, ArrayMeta, ZarrFormatError
+from .zarr.stats import StatsMerge
 from .zarr.store import open_store
 from .zarr.writer import write_chunk, write_root_group
 
@@ -65,10 +66,8 @@ from .zarr.writer import write_chunk, write_root_group
 #: dominated every metadata-scale store write (persisted-index
 #: centroid/scale/code/signature stores, small appends). 65536 rows =
 #: one default chunk; at any real corpus size the distributed commit
-#: runs unchanged. Env-tunable (0 disables the fast path).
-WRITE_DRIVER_ROWS_MAX = int(
-    os.environ.get("SPARK_GRAFT_WRITE_DRIVER_ROWS") or 65536
-)
+#: runs unchanged (0 disables the fast path).
+WRITE_DRIVER_ROWS_MAX = 65536
 
 __all__ = [
     "write_zarr",
@@ -192,19 +191,6 @@ def _table_codecs(
     ]
 
 
-def _commit_totals(committed, want_stats: bool):
-    """Shared tail of both writers' commit protocol: with stats on,
-    collect the per-object rows (object-count-sized — the
-    chunk_rows/shard_chunks lever bounds it) so their stats can merge;
-    with stats off, aggregate server-side so nothing object-sized ever
-    reaches the driver. Returns (written, rows_or_None)."""
-    if want_stats:
-        rows = committed.collect()
-        return sum(int(r["rows"]) for r in rows), rows
-    total = committed.agg(F.sum("rows").alias("written")).first()["written"]
-    return int(total or 0), None
-
-
 def _attach_cell_positions(spark, df, dims, axes, chunk_shape, how="inner"):
     """Shared grid-writer addressing: broadcast-join each dim's
     (value → axis position) vocabulary onto ``df`` and derive the
@@ -293,6 +279,16 @@ def _block_stat_pair(block, meta):
     ]
 
 
+def _fill_pairs(metas, fills) -> Dict[str, list]:
+    """Each array's [lower, upper] pair for a cell without a chunk
+    object: a scan materializes pure fill there, so the fill value IS
+    the bound."""
+    return {
+        c: _block_stat_pair(np.asarray(fills[c], dtype=m.dtype), m)
+        for c, m in metas.items()
+    }
+
+
 def _validate_append_target(
     store,
     schema,
@@ -369,60 +365,39 @@ def _stats_eligible(dtype: np.dtype) -> bool:
     return dtype.kind in "biufMO"
 
 
+def _eligible(metas: Dict[str, ArrayMeta]) -> Dict[str, ArrayMeta]:
+    """The arrays of ``metas`` that record statistics."""
+    return {n: m for n, m in metas.items() if _stats_eligible(m.dtype)}
+
+
 #: Per-array cap on how many per-object [min, max] entries live INLINE
 #: in the array's attribute JSON (and the consolidated root). Inline
 #: stats grow O(n_objects) — fine at shard granularity, but a
 #: million-object array would put a multi-hundred-MB list in zarr.json
-#: and every PLANNER would parse it on every query. Past the cap:
-#:
-#: - the 1-D table writer (write_zarr) and refresh_stats move the
-#:   entries to sharded sidecar blocks (``__stats__/<array>/<b>.json``,
-#:   zarr/stats.py) behind a tiny marker attribute — pruning survives
-#:   ANY object count and the blocks load lazily, only during a
-#:   pruning pass, only for predicate columns (round-8; previously
-#:   stats were DROPPED past the cap, losing pruning on exactly the
-#:   billion-object stores that need it most);
-#: - N-D grid creates (r9), appends, and add-column (both r10)
-#:   assemble sidecar blocks distributed too — the append's
-#:   old-ordinal remap runs as a keys-only Spark job
-#:   (_assemble_grid_append_stats_sidecar), so no grid write verb
-#:   carries a driver-side stats bound anymore.
+#: and every PLANNER would parse it on every query. Past the cap every
+#: write verb stores the entries in sharded sidecar blocks
+#: (``__stats__/<array>/<b>.json``, zarr/stats.py) behind a tiny marker
+#: attribute — pruning survives ANY object count and the blocks load
+#: lazily, only during a pruning pass, only for predicate columns. The
+#: representation depends on the entry count alone; the one merge
+#: (:func:`_merge_stats`) builds the entries on the driver when the
+#: committed rows are already there, else in one task per changed
+#: block, so no verb holds a per-object list on the driver past it.
 #:
 #: The reference records no statistics at all (opener.rs:171-173), so
 #: this extension carries its own scale story.
 STATS_MAX_OBJECTS = 65536
 
 
-#: Tier CUTOVER for :func:`refresh_stats` (r11 — no longer a
-#: capability bound anywhere): at or under it the retrofit recompute
-#: keeps its driver-assembly form (one parallelize job, small-store
-#: latency); past it the work list is ``spark.range`` over chunk
-#: ordinals, per-object pairs compute in ``mapInPandas`` tasks, and
-#: one task per 64Ki-ordinal group writes each COMPLETE sidecar
-#: block — no per-object list ever materializes on the driver, so a
-#: billion-object third-party store CAN be retrofitted. Every grid
-#: WRITE verb (create r9; append + add-column r10) already assembles
-#: sidecar blocks fully distributed past the inline cap.
+#: Tier CUTOVER for :func:`refresh_stats` (not a capability bound): at
+#: or under it the recompute collects its per-object pairs (one
+#: parallelize job, small-store latency) and :func:`_merge_stats`
+#: merges them on the driver; past it the work list is ``spark.range``
+#: over chunk ordinals, the pairs compute in ``mapInPandas`` tasks and
+#: the merge runs in one task per sidecar block — no per-object list
+#: ever materializes on the driver, so a billion-object third-party
+#: store CAN be retrofitted.
 STATS_GRID_MAX_OBJECTS = 1 << 22
-
-
-def _stats_within_cap(
-    n_objects: int, where: str, cap: Optional[int] = None
-) -> bool:
-    """False (with a one-line warning) when an array would need more
-    stats entries than the representation in use can carry."""
-    cap = STATS_MAX_OBJECTS if cap is None else cap
-    if n_objects <= cap:
-        return True
-    warnings.warn(
-        f"{where}: {n_objects} store objects exceed the statistics "
-        f"cap ({cap}); skipping [min,max] statistics. Scans remain "
-        "correct without pruning; grow the per-object size "
-        "(chunk_rows / shard_chunks / shard_shape) to keep stats on "
-        "stores this large.",
-        stacklevel=3,
-    )
-    return False
 
 
 #: string stats bound length — long documents would bloat the
@@ -460,570 +435,223 @@ def _stat_encode(val, dtype: np.dtype, upper: bool = False):
     return int(val)
 
 
-def _existing_stats(store, names) -> Dict[str, list]:
-    """Per-column [[min, max] | None, ...] lists from an append
-    target's metadata; {} when absent/invalid (appends then leave the
-    old objects' entries unknown — sound, just unprunable). Sidecar
-    markers resolve to their reassembled lists (zarr/stats.py)."""
+def _recorded_stats(store, names) -> Dict[str, object]:
+    """Each named array's raw recorded statistics attribute (inline
+    list, sidecar marker or None) — the old region of an append's
+    merge; {} when the store's metadata cannot be read (the old
+    entries are then unknown: sound, just unprunable)."""
     from .zarr.array import infer_store_arrays
-    from .zarr.stats import resolve_stats
 
-    out: Dict[str, list] = {}
     try:
-        for a in infer_store_arrays(store):
-            if a.meta.name in names:
-                s = resolve_stats(
-                    store,
-                    a.meta.name,
-                    a.meta.attributes.get(STATS_ATTR_KEY),
-                )
-                if isinstance(s, list):
-                    out[a.meta.name] = s
+        return {
+            a.meta.name: a.meta.attributes.get(STATS_ATTR_KEY)
+            for a in infer_store_arrays(store)
+            if a.meta.name in names
+        }
     except ZarrFormatError:
-        pass
+        return {}
+
+
+def _written(rows) -> Dict[str, Dict[int, object]]:
+    """Committed ``(cell, stats)`` rows as ``{array: {ordinal: pair}}``
+    (``stats`` is the write task's JSON ``{array: [lo, hi]}``)."""
+    out: Dict[str, Dict[int, object]] = {}
+    for r in rows:
+        for c, pair in json.loads(r["stats"]).items():
+            out.setdefault(c, {})[int(r["cell"])] = pair
     return out
 
 
-def _patch_stats(store, meta, name: str, patches: Dict[int, object],
-                 n_objects: int) -> bool:
-    """Apply ``{ordinal: [lo, hi] | None}`` to an array's recorded
-    statistics in WHICHEVER representation they use — the primitive
-    the in-place mutation verbs (upsert) build their invalidate-first
-    and re-stat steps on.
-
-    - inline list: mutates ``meta.attributes`` and returns True (the
-      caller republishes zarr.json — the attribute changed);
-    - sidecar marker: rewrites only the blocks containing patched
-      ordinals (delta-proportional I/O) and returns False (the
-      attribute is unchanged, no metadata republish needed);
-    - absent/invalid stats: no-op, returns False — nothing recorded
-      means nothing can go stale."""
-    from .zarr.stats import block_key, is_sidecar_marker
-
-    old = meta.attributes.get(STATS_ATTR_KEY)
-    if isinstance(old, list):
-        entries = (
-            list(old) if len(old) == n_objects else [None] * n_objects
-        )
-        for i, pair in patches.items():
-            entries[i] = pair
-        meta.attributes[STATS_ATTR_KEY] = entries
-        return True
-    if is_sidecar_marker(old) and old.get("n_entries") == n_objects:
-        blk = old["block_entries"]
-        byblk: Dict[int, Dict[int, object]] = {}
-        for i, pair in patches.items():
-            byblk.setdefault(i // blk, {})[i] = pair
-        for b, ps in sorted(byblk.items()):
-            key = block_key(name, b)
-            base_len = min(blk, n_objects - b * blk)
-            raw = store.get(key)
-            entries = None
-            if raw is not None:
-                try:
-                    entries = json.loads(raw)
-                except ValueError:
-                    entries = None
-            if not isinstance(entries, list) or len(entries) != base_len:
-                entries = [None] * base_len
-            for i, pair in ps.items():
-                entries[i - b * blk] = pair
-            store.set(key, json.dumps(entries).encode())
-        return False
-    return False
-
-
-def _assemble_stats_sidecar(
-    store, path, committed, metas, col_names,
-    n_units, base_rows, unit,
-) -> None:
-    """Past-cap statistics commit for write_zarr: entries live in
-    sharded sidecar blocks (``zarr/stats.py``) and the attribute
-    carries a tiny marker, so pruning survives ANY object count.
-
-    Fully distributed and damage-proportional: one task per 64Ki-cid
-    block patches exactly the blocks new cids touch (read old block →
-    splice new pairs → rewrite); an append to a past-cap store leaves
-    every other block's bytes untouched, and the driver holds at most
-    ONE block (the inline→sidecar migration pre-seed) — never a full
-    entries list. Concurrent readers stay sound throughout: a reader
-    holding the pre-append marker sees a reassembled length that no
-    longer matches its ``n_entries`` and degrades to no-pruning until
-    the new metadata publishes."""
-    from .zarr.stats import (
-        STATS_BLOCK_ENTRIES,
-        STATS_SIDECAR_PREFIX,
-        delete_sidecar,
-        is_sidecar_marker,
-        resolve_stats,
-    )
-
-    blk = STATS_BLOCK_ENTRIES
-    eligible = [n for n in col_names if _stats_eligible(metas[n].dtype)]
-    if not eligible:
+@contextmanager
+def _commit_job(committed, want_stats: bool, on_driver: bool):
+    """Run a verb's chunk-writing job exactly once and yield ``(rows
+    written, committed stats)``. The stats follow where the statistics
+    merge runs: ``{array: {ordinal: pair}}`` collected for the driver;
+    the persisted frame of commit rows for the task placement (past
+    STATS_MAX_OBJECTS — nothing object-sized reaches the driver, and
+    the frame is unpersisted on exit); None with stats off, the row
+    total then aggregating server-side."""
+    if want_stats and on_driver:
+        rows = committed.collect()
+        yield sum(int(r["rows"]) for r in rows), _written(rows)
         return
-    old_units = -(-base_rows // unit) if base_rows else 0
-    n_blocks = -(-n_units // blk)
-
-    if old_units:
-        # migrate the append target's OLD range into blocks so every
-        # block a reader demands exists. Three cases per column:
-        # block-aligned sidecar already on disk (skip — that is the
-        # damage-proportional append), inline list (≤ one cap of
-        # entries — split into blocks), absent/stale (None-filled
-        # blocks: old objects unknown, new objects still prune).
-        raw_old: Dict[str, object] = {}
-        try:
-            from .zarr.array import infer_store_arrays
-
-            for a in infer_store_arrays(store):
-                if a.meta.name in eligible:
-                    raw_old[a.meta.name] = a.meta.attributes.get(
-                        STATS_ATTR_KEY
-                    )
-        except ZarrFormatError:
-            pass
-        for n in eligible:
-            val = raw_old.get(n)
-            if (
-                is_sidecar_marker(val)
-                and val.get("n_entries") == old_units
-                and val.get("block_entries") == blk
-            ):
-                continue
-            entries_old = resolve_stats(store, n, val)
-            if entries_old is not None and len(entries_old) != old_units:
-                # wrong length = provably stale (out-of-band edits):
-                # drop wholesale, never trust a prefix
-                entries_old = None
-            if entries_old is None:
-                entries_old = [None] * old_units
-            delete_sidecar(store, n)
-            for b in range(-(-old_units // blk)):
-                store.set(
-                    f"{STATS_SIDECAR_PREFIX}/{n}/{b}.json",
-                    json.dumps(
-                        entries_old[b * blk : (b + 1) * blk]
-                    ).encode(),
-                )
-    else:
-        for n in eligible:
-            delete_sidecar(store, n)  # clean slate on create
-
-    path_t = path
-    blk_t = blk
-    n_units_t = n_units
-    eligible_t = list(eligible)
-    prefix_t = STATS_SIDECAR_PREFIX
-
-    def patch_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["__blk"].iloc[0])
-        task_store = open_store(path_t)
-        base_len = min(blk_t, n_units_t - b * blk_t)
-        pairs = [
-            (int(c), json.loads(s))
-            for c, s in zip(pdf["cid"], pdf["stats"])
-        ]
-        for name in eligible_t:
-            key = f"{prefix_t}/{name}/{b}.json"
-            entries = None
-            raw = task_store.get(key)
-            if raw is not None:
-                try:
-                    entries = json.loads(raw)
-                except ValueError:
-                    entries = None
-            if not isinstance(entries, list) or len(entries) > base_len:
-                entries = []
-            entries = entries + [None] * (base_len - len(entries))
-            for cid, decoded in pairs:
-                slot = cid - b * blk_t
-                if not (0 <= slot < base_len):
-                    # a misassigned cid must fail LOUDLY — a silent
-                    # Python negative-index would write the pair into
-                    # the wrong slot and corrupt pruning soundness
-                    raise ZarrFormatError(
-                        f"stats sidecar: cid {cid} outside block {b} "
-                        f"(block_entries={blk_t}, base_len={base_len})"
-                    )
-                entries[slot] = decoded.get(name)
-            task_store.set(key, json.dumps(entries).encode())
-        return pd.DataFrame({"blk": [b]})
-
-    (
-        # integer division: (cid / blk).cast("long") goes through
-        # doubles and can misassign the block id at extreme cid
-        committed.withColumn("__blk", F.expr(f"cid div {int(blk)}"))
-        .groupBy("__blk")
-        .applyInPandas(patch_block, "blk long")
-        .count()
-    )
-    for n in eligible:
-        metas[n].attributes[STATS_ATTR_KEY] = {
-            "sidecar": n_blocks,
-            "n_entries": n_units,
-            "block_entries": blk,
-        }
+    if want_stats:
+        committed = committed.persist()
+    try:
+        total = committed.agg(F.sum("rows").alias("w")).first()["w"]
+        yield int(total or 0), committed if want_stats else None
+    finally:
+        if want_stats:
+            committed.unpersist()
 
 
-def _assemble_grid_stats_sidecar(
-    spark, store, path, committed, metas, data_cols, fills, n_cells
-) -> Dict[str, Dict]:
-    """Distributed statistics commit for a FRESH grid create past the
-    inline cap (r8 verdict item 6 — the fill-cell bookkeeping was the
-    grid writer's last driver-side O(n_cells) term): one task per
-    64Ki-ordinal sidecar block writes the COMPLETE block, splicing
-    written cells' pairs from the commit rows and binding absent
-    cells to the fill pair in-task (cells absent from the data never
-    got a chunk object; a scan materializes pure fill there, so the
-    fill value IS the bound). O(one block) memory anywhere — the
-    driver sees only the block count. Returns the sidecar marker per
-    eligible column. Appends route through
-    :func:`_assemble_grid_append_stats_sidecar` instead (r10), whose
-    old-ordinal remap runs as a keys-only Spark job."""
-    import pandas as pd
+def _merge_stats(
+    spark, store, path, metas, merge, committed, olds=None, fills=None,
+    complete=False,
+) -> None:
+    """Merge the statistics of ``metas``' arrays under the one rule of
+    :func:`zarr.stats.merge_entries` and set each meta's
+    ``STATS_ATTR_KEY`` (the caller publishes the metadata, last).
 
-    from .zarr.stats import (
-        STATS_BLOCK_ENTRIES,
-        STATS_SIDECAR_PREFIX,
-        delete_sidecar,
-    )
+    Placement follows where the committed rows already are: a
+    ``{array: {ordinal: pair}}`` dict builds on the driver, and so does
+    a frame of ``(cell, stats)`` rows at or under STATS_MAX_OBJECTS
+    (inline entries, a bounded collect); a frame past it builds in one
+    task per changed sidecar block. ``olds`` holds each array's raw
+    recorded attribute (the old region of ``merge``), ``fills`` the
+    pair of unwritten new-region slots."""
+    from .zarr import stats as S
 
-    blk = STATS_BLOCK_ENTRIES
-    eligible = [c for c in data_cols if _stats_eligible(metas[c].dtype)]
-    if not eligible:
-        return {}
-    fill_pairs = {}
-    for c in eligible:
-        fb = np.asarray(fills[c], dtype=metas[c].dtype)
-        fill_pairs[c] = [
-            _stat_encode(fb, metas[c].dtype),
-            _stat_encode(fb, metas[c].dtype, upper=True),
-        ]
-    n_blocks = -(-n_cells // blk)
-    for c in eligible:
-        delete_sidecar(store, c)  # clean slate on create
-
-    path_t = path
-    blk_t = blk
-    n_cells_t = int(n_cells)
-    eligible_t = list(eligible)
-    fills_t = dict(fill_pairs)
-    prefix_t = STATS_SIDECAR_PREFIX
-
-    def fill_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["__blk"].iloc[0])
-        base_len = min(blk_t, n_cells_t - b * blk_t)
-        task_store = open_store(path_t)
-        pairs = [
-            (int(c), json.loads(s))
-            for c, s in zip(pdf["cell"], pdf["stats"])
-            if s is not None
-        ]
-        for name in eligible_t:
-            entries = [fills_t[name]] * base_len
-            for cid, decoded in pairs:
-                slot = cid - b * blk_t
-                if not (0 <= slot < base_len):
-                    raise ZarrFormatError(
-                        f"grid stats sidecar: cell {cid} outside "
-                        f"block {b} (block_entries={blk_t}, "
-                        f"base_len={base_len})"
-                    )
-                if name in decoded:
-                    # slot assignment replaces the shared fill-pair
-                    # reference; the remaining aliases are never
-                    # mutated in place
-                    entries[slot] = decoded[name]
-            task_store.set(
-                f"{prefix_t}/{name}/{b}.json",
-                json.dumps(entries).encode(),
+    if not metas:
+        return
+    olds = olds or {}
+    fills = fills or {}
+    if isinstance(committed, DataFrame):
+        if merge.n_entries > STATS_MAX_OBJECTS:
+            values = _merge_stats_in_tasks(
+                spark, store, path, merge, committed,
+                {c: olds.get(c) for c in metas}, fills, complete,
             )
+            for c, v in values.items():
+                metas[c].attributes[STATS_ATTR_KEY] = v
+            return
+        committed = _written(committed.collect())
+    for c, meta in metas.items():
+        meta.attributes[STATS_ATTR_KEY] = S.store_merged(
+            store, c, merge, committed.get(c, {}),
+            S.RecordedStats(store, c, olds.get(c), merge.n_old),
+            fills.get(c), STATS_MAX_OBJECTS, complete,
+        )
+
+
+def _merge_stats_in_tasks(
+    spark, store, path, merge, committed, olds, fills, complete,
+) -> Dict[str, Dict]:
+    """Task placement of :func:`zarr.stats.merge_entries`: one task per
+    changed sidecar block builds and writes that block for every array,
+    so the driver holds only block counts. The blocks built are those
+    holding a committed row plus every block from the first one an old
+    sidecar cannot keep in place (see ``first_rebuilt_block``).
+
+    A task reads the old block under its own key only. Where old
+    entries come from other keys — ordinals move (a grid append along
+    an inner axis) or the old sidecar used another block size — a
+    first job copies each block's old run out and is checkpointed
+    before any block is rewritten, so no task reads a key another task
+    of the same job overwrites. ``localCheckpoint`` truncates lineage:
+    a lost partition can never silently recompute from rewritten
+    blocks; executor loss fails the write instead (a fault-tolerant
+    deployment sets a reliable checkpoint dir and uses checkpoint()).
+    Returns each array's sidecar marker."""
+    from .zarr import stats as S
+
+    blk = S.STATS_BLOCK_ENTRIES
+    n = merge.n_entries
+    n_blocks = -(-n // blk)
+    recorded = {
+        c: S.RecordedStats(store, c, v, merge.n_old) for c, v in olds.items()
+    }
+    firsts = {
+        c: S.first_rebuilt_block(merge, r, blk) for c, r in recorded.items()
+    }
+    staged = [
+        c for c, r in recorded.items() if S.reads_other_blocks(merge, r, blk)
+    ]
+    n_old = merge.n_old
+
+    def stage_old_runs(batches):
+        task_store = open_store(path)
+        for pdf in batches:
+            out = []
+            for b in pdf["__blk"]:
+                b = int(b)
+                ords, _ = merge.old_ordinals(b * blk, min(n, (b + 1) * blk))
+                ords = ords[ords >= 0]
+                lo = int(ords[0]) if len(ords) else 0
+                hi = int(ords[-1]) + 1 if len(ords) else 0
+                for c in staged:
+                    old = S.RecordedStats(task_store, c, olds[c], n_old)
+                    out.append(
+                        (b, c, lo, json.dumps([old[o] for o in range(lo, hi)]))
+                    )
+            yield pd.DataFrame(out, columns=["__blk", "col", "olo", "old"])
+
+    def build_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        b = int(pdf["__blk"].iloc[0])
+        task_store = open_store(path)
+        written = _written(pdf[pdf["stats"].notna()].to_dict("records"))
+        runs = {}
+        if "col" in pdf:
+            for c, lo, old in pdf[pdf["col"].notna()][
+                ["col", "olo", "old"]
+            ].itertuples(index=False):
+                runs[c] = dict(enumerate(json.loads(old), int(lo)))
+        for c in olds:
+            if b < firsts[c] and not written:
+                continue  # an unchanged block of an in-place sidecar
+            old = (
+                runs[c] if c in runs
+                else S.RecordedStats(task_store, c, olds[c], n_old)
+            )
+            entries = S.merge_entries(
+                merge, b * blk, min(n, (b + 1) * blk),
+                written.get(c, {}), old, fills.get(c),
+            )
+            if complete:
+                S.check_complete(entries, c)
+            task_store.set(S.block_key(c, b), json.dumps(entries).encode())
         return pd.DataFrame({"blk": [b]})
 
-    # left-join one seed row per block so EMPTY blocks (ordinal
-    # ranges no data cell touched) still publish all-fill content —
-    # resolve_stats demands every block the marker advertises
-    blocks_df = spark.range(n_blocks).select(F.col("id").alias("__blk"))
+    seeds = spark.range(min(firsts.values(), default=0), n_blocks).select(
+        F.col("id").alias("__blk")
+    )
+    if staged:
+        seeds = seeds.mapInPandas(
+            stage_old_runs, "__blk long, col string, olo long, old string"
+        ).localCheckpoint(eager=True)
     rows = committed.select(
         F.expr(f"cell div {int(blk)}").alias("__blk"), "cell", "stats"
-    )
-    (
-        blocks_df.join(rows, "__blk", "left")
-        .groupBy("__blk")
-        .applyInPandas(fill_block, "blk long")
-        .count()
-    )
-    marker = {
-        "sidecar": int(n_blocks),
-        "n_entries": int(n_cells),
-        "block_entries": int(blk),
-    }
-    return {c: dict(marker) for c in eligible}
+    ).unionByName(seeds, allowMissingColumns=True)
+    rows.groupBy("__blk").applyInPandas(build_block, "blk long").count()
+    for c in olds:
+        S.sweep_blocks(store, c, n_blocks)
+    return {c: S.sidecar_marker(n_blocks, n, blk) for c in olds}
 
 
-def _assemble_grid_append_stats_sidecar(
-    spark, store, path, committed, metas, data_cols, fills,
-    grid_new, grid_old, ax_i, cs_a, old_len_a, old_stats_raw,
-) -> Dict[str, Dict]:
-    """Distributed statistics commit for a grid APPEND past the
-    inline cap — r10, closing the writer family's last driver-memory
-    term (the r9 driver-side remap and its STATS_GRID_MAX_OBJECTS
-    bound): no key/entry list ever materializes on the driver.
-
-    Only the append axis's grid count changes (``grid_old[ax_i]`` →
-    ``grid_new[ax_i]``; layout validation pins every other radix), so
-    the old→new C-order ordinal remap is pure mixed-radix integer
-    arithmetic and runs JVM-side as Spark SQL expressions:
-
-        suffix = old_ord %  P          (P = ∏ radices behind ax_i)
-        a      = (old_ord div P) %  g_old_a
-        prefix = (old_ord div P) div g_old_a
-        new    = (prefix * g_new_a + a) * P + suffix
-
-    Pipeline: old sidecar blocks read one-per-task (old INLINE lists,
-    ≤ the 64Ki inline cap, parallelize from the driver — the one
-    crossing-the-cap append) → remap to new ordinals + boundary flag
-    (JVM) → union with this append's committed cell stats → group by
-    new 64Ki-ordinal block → one task writes each COMPLETE block.
-    Per-slot defaults are recomputed in-task from the same
-    arithmetic: old-region slots with no surviving entry are UNKNOWN
-    (None — old data exists there; calling it fill would prune
-    wrongly), new-region slots are the fill pair (no chunk object →
-    a scan materializes pure fill), and the partial old boundary
-    cell's bounds union with the fill its extension materializes.
-    Committed cells win outright (their write task read-merged the
-    old chunk and bounded the full new block). Slicing matches the
-    driver path bit-for-bit — both publish identical blocks.
-
-    Same in-place block-overwrite visibility caveat as the driver
-    path it replaces: a reader holding pre-append metadata that
-    resolves its sidecar mid-rewrite can fetch a remapped block;
-    stats are advisory planning metadata republished atomically with
-    the metadata-last commit."""
-    import pandas as pd
-
-    from .zarr.stats import (
-        STATS_BLOCK_ENTRIES,
-        block_key,
-        is_sidecar_marker,
-    )
-
-    blk = STATS_BLOCK_ENTRIES
-    eligible = [c for c in data_cols if _stats_eligible(metas[c].dtype)]
-    if not eligible:
-        return {}
-    n_cells = 1
-    for g in grid_new:
-        n_cells *= int(g)
-    n_old = 1
-    for g in grid_old:
-        n_old *= int(g)
-    n_blocks = -(-n_cells // blk)
-    g_old_a = int(grid_old[ax_i])
-    g_new_a = int(grid_new[ax_i])
-    p_behind = 1
-    for g in grid_new[ax_i + 1 :]:
-        p_behind *= int(g)
-    # the partial old cell along the append axis (its extension
-    # materializes fill, so its bounds union with the fill pair)
-    boundary = old_len_a // cs_a if old_len_a % cs_a else -1
-    fill_pairs = {}
-    for c in eligible:
-        fb = np.asarray(fills[c], dtype=metas[c].dtype)
-        fill_pairs[c] = [
-            _stat_encode(fb, metas[c].dtype),
-            _stat_encode(fb, metas[c].dtype, upper=True),
-        ]
-
-    old_schema = "col string, old_ord long, pair string"
-    old_frames = []
-    inline_rows = []
-    sidecar_work = []
-    for c in eligible:
-        raw = old_stats_raw.get(c)
-        if isinstance(raw, list) and len(raw) == n_old:
-            inline_rows.extend(
-                (c, i, json.dumps(p))
-                for i, p in enumerate(raw)
-                if p is not None
+def _update_stats_in_place(store, path, metas, merge, written) -> None:
+    """The statistics step of the in-place verbs (region write,
+    upsert), run twice: before any chunk mutates with None pairs for
+    the touched objects (invalidate first: new values under old bounds
+    would let pruning drop updated rows, mid-job or with stats off),
+    and after the last chunk lands with their recomputed pairs.
+    ``written`` is ``{array: {ordinal: pair}}``; the merge is the
+    identity remap, built on the driver (the rows are delta-sized) and
+    touching only the sidecar blocks that hold a written slot.
+    Republishes each array whose attribute changed (a sidecar marker
+    does not), then the consolidated root."""
+    dirty = False
+    for c, meta in _eligible(metas).items():
+        pairs = written.get(c)
+        old = meta.attributes.get(STATS_ATTR_KEY)
+        if not pairs or (
+            old is None
+            and (
+                merge.n_entries > STATS_MAX_OBJECTS
+                or all(p is None for p in pairs.values())
             )
-        elif is_sidecar_marker(raw) and raw.get("n_entries") == n_old:
-            be = int(raw["block_entries"])
-            sidecar_work.extend(
-                (c, b, be) for b in range(int(raw["sidecar"]))
-            )
-        # else: no / stale old stats — the whole old region stays
-        # UNKNOWN for this column via the in-task default
-    if inline_rows:
-        old_frames.append(spark.createDataFrame(inline_rows, old_schema))
-    if sidecar_work:
-        path_t0 = path
-
-        def read_old_blocks(batches):
-            task_store = open_store(path_t0)
-            for pdf in batches:
-                for c, b, be in zip(
-                    pdf["col"], pdf["blk"], pdf["be"]
-                ):
-                    raw = task_store.get(block_key(str(c), int(b)))
-                    entries = json.loads(raw) if raw is not None else []
-                    ords, pairs = [], []
-                    for i, p in enumerate(entries):
-                        if p is not None:
-                            ords.append(int(b) * int(be) + i)
-                            pairs.append(json.dumps(p))
-                    yield pd.DataFrame(
-                        {
-                            "col": [str(c)] * len(ords),
-                            "old_ord": pd.Series(
-                                ords, dtype="int64"
-                            ),
-                            "pair": pairs,
-                        }
-                    )
-
-        work_df = spark.createDataFrame(
-            sidecar_work, "col string, blk long, be long"
-        ).repartition(
-            max(
-                1,
-                min(
-                    len(sidecar_work),
-                    spark.sparkContext.defaultParallelism * 2,
-                ),
-            )
-        )
-        old_frames.append(
-            work_df.mapInPandas(read_old_blocks, old_schema)
-        )
-
-    # JVM-side remap + boundary flag; prio 0 (committed rows win)
-    remapped = None
-    old_df = None
-    if old_frames:
-        old_df = old_frames[0]
-        for f in old_frames[1:]:
-            old_df = old_df.unionByName(f)
-        # MATERIALIZE the old entries before any new block is
-        # written: the final job OVERWRITES old sidecar block keys in
-        # place, and without this barrier a read_old_blocks task
-        # could race a write_block task inside the same action and
-        # read remapped content as if it were pre-append.
-        # localCheckpoint TRUNCATES lineage — a lost partition can
-        # never silently recompute from the (by then rewritten)
-        # source files; executor loss fails the append instead
-        # (the dedup.py:288 tradeoff; a fault-tolerant deployment
-        # sets a reliable checkpoint dir and swaps to checkpoint()).
-        old_df = old_df.localCheckpoint(eager=True)
-        rest = F.expr(f"old_ord div {p_behind}")
-        a_dig = rest % F.lit(g_old_a)
-        prefix = F.expr(f"(old_ord div {p_behind}) div {g_old_a}")
-        new_ord = (
-            (prefix * F.lit(g_new_a) + a_dig) * F.lit(p_behind)
-            + F.col("old_ord") % F.lit(p_behind)
-        )
-        remapped = old_df.select(
-            "col",
-            new_ord.cast("long").alias("cell"),
-            "pair",
-            (a_dig == F.lit(boundary)).alias("at_boundary"),
-            F.lit(0).alias("prio"),
-        )
-    commit_rows = committed.select(
-        F.lit(None).cast("string").alias("col"),
-        F.col("cell").cast("long").alias("cell"),
-        F.col("stats").alias("pair"),
-        F.lit(False).alias("at_boundary"),
-        F.lit(1).alias("prio"),
-    )
-    all_rows = (
-        commit_rows.unionByName(remapped)
-        if remapped is not None
-        else commit_rows
-    )
-    all_rows = all_rows.withColumn("__blk", F.expr(f"cell div {blk}"))
-
-    path_t = path
-    blk_t = blk
-    n_cells_t = int(n_cells)
-    g_old_a_t = g_old_a
-    g_new_a_t = g_new_a
-    p_behind_t = p_behind
-    eligible_t = list(eligible)
-    fills_t = dict(fill_pairs)
-
-    def write_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["__blk"].iloc[0])
-        base_len = min(blk_t, n_cells_t - b * blk_t)
-        # per-slot defaults from the same arithmetic the remap used:
-        # old-region (append-axis digit < g_old_a) → unknown;
-        # new-region → fill pair
-        ords = b * blk_t + np.arange(base_len, dtype=np.int64)
-        a_dig = (ords // p_behind_t) % g_new_a_t
-        in_old = a_dig < g_old_a_t
-        entries = {
-            c: [None if o else fills_t[c] for o in in_old]
-            for c in eligible_t
-        }
-        pdf = pdf.sort_values("prio")
-        for cell, col, pair, at_b, prio in zip(
-            pdf["cell"], pdf["col"], pdf["pair"],
-            pdf["at_boundary"], pdf["prio"],
         ):
-            if pair is None:  # the left-join seed row of an empty block
-                continue
-            slot = int(cell) - b * blk_t
-            if not (0 <= slot < base_len):
-                raise ZarrFormatError(
-                    f"append stats sidecar: cell {int(cell)} outside "
-                    f"block {b} (block_entries={blk_t}, "
-                    f"base_len={base_len})"
-                )
-            if int(prio) == 0:
-                p = json.loads(pair)
-                if bool(at_b):
-                    p = _union_stat_bounds(p, fills_t[str(col)])
-                entries[str(col)][slot] = p
-            else:
-                for c, p in json.loads(pair).items():
-                    if c in entries:
-                        entries[c][slot] = p
-        task_store = open_store(path_t)
-        from .zarr.stats import block_key as _bk
+            # nothing recorded: nothing stale to invalidate, and a
+            # past-cap store stays stats-less (refresh_stats / a full
+            # rewrite is the deliberate rebuild)
+            continue
+        _merge_stats(None, store, path, {c: meta}, merge, written, {c: old})
+        if meta.attributes.get(STATS_ATTR_KEY) != old:
+            store.set(f"{c}/zarr.json", json.dumps(meta.to_json()).encode())
+            dirty = True
+    if dirty:
+        from .zarr.writer import consolidate_metadata
 
-        for c in eligible_t:
-            task_store.set(
-                _bk(c, b), json.dumps(entries[c]).encode()
-            )
-        return pd.DataFrame({"blk": [b]})
-
-    # left-join one seed row per block so EMPTY new blocks (ordinal
-    # ranges neither old entries nor this append touched) still
-    # publish their default content — resolve_stats demands every
-    # block the marker advertises
-    blocks_df = spark.range(n_blocks).select(F.col("id").alias("__blk"))
-    (
-        blocks_df.join(all_rows, "__blk", "left")
-        .groupBy("__blk")
-        .applyInPandas(write_block, "blk long")
-        .count()
-    )
-    # defensive: an old sidecar written with a SMALLER block_entries
-    # constant could hold more blocks than the grown marker
-    # advertises — delete the unreferenced tail so no debris survives
-    # (block-count arithmetic; never an entry list)
-    for c in eligible:
-        raw = old_stats_raw.get(c)
-        if is_sidecar_marker(raw):
-            for b in range(n_blocks, int(raw["sidecar"])):
-                store.delete(block_key(c, b))
-    marker = {
-        "sidecar": int(n_blocks),
-        "n_entries": int(n_cells),
-        "block_entries": int(blk),
-    }
-    return {c: dict(marker) for c in eligible}
+        consolidate_metadata(store)
 
 
 def _clear_store(store, keep_staging: bool = False, spark=None) -> None:
@@ -1081,7 +709,7 @@ def _write_zarr_driver_rows(
     scale stores: tens of rows). Produces a BYTE-IDENTICAL store to
     ``write_zarr`` on a single-partition DataFrame of the same rows —
     same metas, same chunking (``eff_chunk = min(chunk_rows, n)``),
-    same codec chain, same inline [min, max] statistics, same
+    same codec chain, same [min, max] statistics, same
     metadata-last publish order — without any Spark job (profiled
     r13: each tiny write_zarr call was a ~1 s persist + count job +
     shuffle + applyInPandas affair for a 16-row frame; optimization
@@ -1127,29 +755,23 @@ def _write_zarr_driver_rows(
         for field in schema.fields
     }
     n_units = -(-total_rows // eff_chunk) if total_rows else 0
-    if not _stats_within_cap(n_units, "_write_zarr_driver_rows"):
-        raise ZarrFormatError(
-            "_write_zarr_driver_rows is for metadata-scale stores; "
-            f"{n_units} store objects need write_zarr's sidecar stats"
-        )
     if total_rows:
         pdf = pd.DataFrame(
             rows, columns=[f.name for f in schema.fields]
         )
+        written: Dict[str, Dict[int, list]] = {}
         for name, meta in metas.items():
             data = _reject_nulls(pdf[name].values, meta.dtype, name)
-            entries = []
             for cid in range(n_units):
                 part = data[cid * eff_chunk : (cid + 1) * eff_chunk]
                 write_chunk(store, meta, (cid,), part)
-                entries.append(
-                    [
-                        _stat_encode(np.min(part), meta.dtype),
-                        _stat_encode(np.max(part), meta.dtype, upper=True),
-                    ]
+                written.setdefault(name, {})[cid] = _block_stat_pair(
+                    part, meta
                 )
-            if _stats_eligible(meta.dtype):
-                meta.attributes[STATS_ATTR_KEY] = entries
+        _merge_stats(
+            None, store, path, _eligible(metas), StatsMerge((n_units,)),
+            written,
+        )
     # metadata LAST (write_zarr's publish order): per-array docs, then
     # the consolidated root
     for name, meta in metas.items():
@@ -1205,18 +827,14 @@ def write_zarr(
     statistics the scan uses to prune objects STATICALLY at planning
     time, before any chunk read (the reference stubs statistics,
     opener.rs:171-173). One [min, max] pair per object per column
-    rides the existing per-object commit row back to the driver, so
-    the driver-side cost scales with the object count (the same
-    chunk_rows × shard_chunks lever; at extreme object counts pass
-    ``stats=False`` — the commit then aggregates server-side and
-    nothing object-sized reaches the driver). Appends merge:
+    rides the existing per-object commit row. Appends merge:
     untouched objects keep their entries, the boundary object's pair
     is recomputed over merged data; appending to a stats-less store
     leaves old entries unknown (never pruned). Past
-    ``STATS_MAX_OBJECTS`` store objects per array the writer skips
-    stats automatically (with a warning) so the consolidated metadata
-    stays planning-readable — grow chunk_rows/shard_chunks to keep
-    pruning on stores that large."""
+    ``STATS_MAX_OBJECTS`` store objects per array the entries move to
+    sidecar blocks, merged in one task per changed block, so the
+    consolidated metadata stays planning-readable and nothing
+    object-sized reaches the driver."""
     if columns:
         df = df.select(*columns)
     for field in df.schema.fields:
@@ -1269,24 +887,6 @@ def write_zarr(
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        def _count_offsets():
-            # pass 1: per-partition counts -> global offsets (the
-            # distributed path's row-index basis)
-            counts = {
-                r["pid"]: r["n"]
-                for r in df.select(F.spark_partition_id().alias("pid"))
-                .groupBy("pid")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            n_parts = (max(counts) + 1) if counts else 0
-            offs: List[int] = []
-            acc = base_rows  # positions continue after any append base
-            for pid in range(n_parts):
-                offs.append(acc)
-                acc += counts.get(pid, 0)
-            return offs, acc
-
         # r14 small-frame probe (guide §5; VERDICT r13 item 2): ONE
         # limit-collect both decides the driver-side fast path and,
         # when it hits, already holds every row in order (CollectLimit
@@ -1318,7 +918,20 @@ def write_zarr(
                 if len(probed) <= cap:
                     small_rows = probed
         if small_rows is None:
-            offsets, total_rows = _count_offsets()
+            # pass 1: per-partition counts -> global offsets (the
+            # distributed path's row-index basis)
+            counts = {
+                r["pid"]: r["n"]
+                for r in df.select(F.spark_partition_id().alias("pid"))
+                .groupBy("pid")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
+            offsets = []
+            total_rows = base_rows  # positions continue after the base
+            for pid in range((max(counts) + 1) if counts else 0):
+                offsets.append(total_rows)
+                total_rows += counts.get(pid, 0)
         else:
             total_rows = base_rows + len(small_rows)
         new_rows = total_rows - base_rows
@@ -1432,16 +1045,23 @@ def write_zarr(
         metas_b = spark.sparkContext.broadcast(metas)
         base_rows_b = base_rows
 
-        n_units_planned = -(-total_rows // unit)
+        n_units = -(-total_rows // unit)
+        old_units = -(-base_rows // unit)
         want_stats = bool(stats)
-        # past the inline cap the entries move to sharded sidecar
-        # blocks (__stats__/<array>/<block>.json) instead of being
-        # DROPPED — pruning survives any object count and zarr.json
-        # stays planning-readable (r7 verdict item 5). Assembly is
-        # fully distributed: one task per block patches only the
-        # blocks new cids touch, the driver never holds an entries
-        # list, and untouched old blocks are untouched bytes.
-        sidecar_stats = want_stats and n_units_planned > STATS_MAX_OBJECTS
+        # an append's boundary object is rewritten, so its slot takes
+        # the committed pair like every new one
+        merge = StatsMerge((n_units,), (old_units,) if old_units else None)
+        olds = (
+            _recorded_stats(store, set(col_names)) if old_units else {}
+        )
+
+        def record_stats(written):
+            if want_stats:
+                _merge_stats(
+                    spark, store, path, _eligible(metas), merge, written,
+                    olds,
+                )
+
         if not want_stats:
             from .zarr.stats import delete_sidecar
 
@@ -1477,32 +1097,16 @@ def write_zarr(
                 write_chunk(task_store, meta, (cid,), data)
                 if want_stats and _stats_eligible(meta.dtype):
                     # np.min/np.max propagate NaN -> encodes as None
-                    obj_stats[name] = [
-                        _stat_encode(np.min(data), meta.dtype),
-                        _stat_encode(
-                            np.max(data), meta.dtype, upper=True
-                        ),
-                    ]
+                    obj_stats[name] = _block_stat_pair(data, meta)
             return pd.DataFrame(
                 {
-                    "cid": [cid],
+                    "cell": [cid],
                     "rows": [len(pdf)],
                     "stats": [json.dumps(obj_stats)],
                 }
             )
 
-        if small_rows is not None and sidecar_stats:
-            # metadata-scale row count but a past-cap OBJECT count
-            # (extreme chunk_rows): the sidecar assembly is a
-            # distributed protocol — take the distributed path after
-            # all (one extra counts job, rare by construction)
-            offsets, _ = _count_offsets()
-            small_rows = None
-        elif (
-            small_rows is None
-            and 0 < new_rows <= cap
-            and not sidecar_stats
-        ):
+        if small_rows is None and 0 < new_rows <= cap:
             # counted small although the size estimate said otherwise
             # (wide rows, opaque kernels): the rows are persisted and
             # counted — one cheap collect still buys the driver-side
@@ -1537,6 +1141,7 @@ def write_zarr(
                     f"write_zarr wrote {written} rows, expected "
                     f"{new_rows}"
                 )
+            record_stats(_written(result_rows))
         else:
             # pass 2: global index -> chunk co-location -> chunk
             # writes. The global row index is computed in PURE JVM
@@ -1580,57 +1185,17 @@ def write_zarr(
                 "__cid", (F.col("__row_idx") / unit).cast("long")
             )
             committed = with_cid.groupBy("__cid").applyInPandas(
-                write_chunk_group, schema="cid long, rows long, stats string"
+                write_chunk_group, schema="cell long, rows long, stats string"
             )
-            if sidecar_stats:
-                # server-side row total (nothing object-sized reaches
-                # the driver), then the distributed block-patch job
-                # below; persist so the chunk-writing stage runs
-                # exactly once
-                committed = committed.persist()
-                try:
-                    written, result_rows = _commit_totals(committed, False)
-                    if written != new_rows:
-                        raise ZarrFormatError(
-                            f"write_zarr wrote {written} rows, expected "
-                            f"{new_rows}"
-                        )
-                    _assemble_stats_sidecar(
-                        store, path, committed, metas, col_names,
-                        n_units_planned, base_rows, unit,
-                    )
-                finally:
-                    committed.unpersist()
-            else:
-                written, result_rows = _commit_totals(committed, want_stats)
+            with _commit_job(
+                committed, want_stats, n_units <= STATS_MAX_OBJECTS
+            ) as (written, stats_rows):
                 if written != new_rows:
                     raise ZarrFormatError(
                         f"write_zarr wrote {written} rows, expected "
                         f"{new_rows}"
                     )
-
-        if not sidecar_stats and want_stats:
-            n_units = n_units_planned
-            first_new = base_rows // unit  # boundary object recomputed
-            old = (
-                _existing_stats(store, set(col_names)) if base_rows else {}
-            )
-            old_units = -(-base_rows // unit) if base_rows else 0
-            per_col = {n: [None] * n_units for n in col_names}
-            for n, entries in old.items():
-                # wrong-length old stats are provably stale (out-of-band
-                # edits) — drop them wholesale, never trust a prefix
-                if len(entries) != old_units:
-                    continue
-                for i in range(first_new):
-                    per_col[n][i] = entries[i]
-            for r in result_rows:
-                decoded = json.loads(r["stats"])
-                for n, pair in decoded.items():
-                    per_col[n][int(r["cid"])] = pair
-            for n, meta in metas.items():
-                if _stats_eligible(meta.dtype):
-                    meta.attributes[STATS_ATTR_KEY] = per_col[n]
+                record_stats(stats_rows)
         publish_metadata()
         return written
     finally:
@@ -1759,20 +1324,10 @@ def _validate_grid_append_target(
             shard=shard_shape,
         )
         # RAW attribute value (inline list / sidecar marker / None):
-        # the caller resolves it driver-side only on the small inline
-        # path; the distributed append assembly reads old sidecar
-        # blocks task-side, so the full entry list never materializes
-        # on the driver (r10 — the writer family's last driver-memory
-        # term)
+        # the statistics merge reads old sidecar blocks one at a time,
+        # so the full entry list never materializes on the driver
         old_stats[c] = m.attributes.get(STATS_ATTR_KEY)
     return old_axes, old_stats, shard_shape
-
-
-def _union_stat_bounds(entry, other):
-    """Union two encoded [lo, hi] stats pairs; unknown poisons."""
-    if not entry or not other or None in entry or None in other:
-        return None
-    return [min(entry[0], other[0]), max(entry[1], other[1])]
 
 
 def write_zarr_grid(
@@ -2003,17 +1558,8 @@ def write_zarr_grid(
         tuple(len(old_axes[d]) for d in dims) if appending else None
     )
 
-    _n_cells_planned = 1
-    for _g in grid:
-        _n_cells_planned *= _g
-    # past the inline cap the sidecar blocks assemble DISTRIBUTED —
-    # fresh creates since r9, appends since r10 (the old-ordinal
-    # remap now runs as a keys-only Spark remap job, so the writer
-    # family carries NO driver-side stats bound at all; since r11
-    # refresh_stats routes past-cap arrays through its own
-    # distributed recompute, so STATS_GRID_MAX_OBJECTS is a tier
-    # CUTOVER, not a capability bound, everywhere)
-    sidecar_grid = bool(stats) and _n_cells_planned > STATS_MAX_OBJECTS
+    # write_cell closes over want_stats: never reassign it below (a
+    # persisted-partition recompute re-serializes the closure)
     want_stats = bool(stats)
     if not want_stats:
         from .zarr.stats import delete_sidecar
@@ -2064,126 +1610,38 @@ def write_zarr_grid(
     committed = out.groupBy("__cell").applyInPandas(
         write_cell, schema="cell long, rows long, stats string"
     )
-    if sidecar_grid:
-        # server-side row total, then the distributed block job;
-        # persist so the chunk-writing stage runs exactly once
-        committed = committed.persist()
-        try:
-            written, _ = _commit_totals(committed, False)
-            if appending:
-                markers = _assemble_grid_append_stats_sidecar(
-                    spark, store, path, committed, metas, data_cols,
-                    fills, grid,
-                    [
-                        -(-len(old_axes[d]) // int(cs))
-                        for d, cs in zip(dims, cell_shape)
-                    ],
-                    ax_i, int(cell_shape[ax_i]),
-                    len(old_axes[append_dim]), old_stats,
-                )
-            else:
-                markers = _assemble_grid_stats_sidecar(
-                    spark, store, path, committed, metas, data_cols,
-                    fills, _n_cells_planned,
-                )
-        finally:
-            committed.unpersist()
-        for c, marker in markers.items():
-            metas[c].attributes[STATS_ATTR_KEY] = marker
-            if not appending:
-                # append republishes EVERY array's metadata in the
-                # metadata-last block below; writing it here would
-                # expose the grown marker before the grown shape
-                store.set(
-                    f"{c}/zarr.json",
-                    json.dumps(metas[c].to_json()).encode(),
-                )
-        result_rows = None
+    if appending:
+        # old cells keep their entries on the grown grid's ordinals;
+        # the partial old cell along the append axis unions its bounds
+        # with the fill its extension materializes
+        old_len = len(old_axes[append_dim])
+        cs_a = int(cell_shape[ax_i])
+        old_grid = [
+            -(-len(old_axes[d]) // int(cs)) for d, cs in zip(dims, cell_shape)
+        ]
+        merge = StatsMerge(
+            grid, old_grid, ax_i, old_len // cs_a if old_len % cs_a else None
+        )
     else:
-        written, result_rows = _commit_totals(committed, want_stats)
-    # driver-side assembly (inline lists / append remap) — the
-    # sidecar_grid path published its markers above. NOTE: want_stats
-    # itself must not be reassigned here: write_cell closes over it
-    # and a persisted-partition recompute would re-serialize the
-    # closure with the new value, silently dropping per-cell stats.
-    if want_stats and not sidecar_grid:
-        import itertools as _it
-
-        n_cells = 1
-        for g in grid:
-            n_cells *= g
-        # cells absent from the data never got a chunk object: a scan
-        # materializes pure fill there, so the fill value IS the bound
-        per_col: Dict[str, list] = {}
-        for c in data_cols:
-            meta = metas[c]
-            if not _stats_eligible(meta.dtype):
-                continue
-            fb = np.asarray(fills[c], dtype=meta.dtype)
-            fill_pair = [
-                _stat_encode(fb, meta.dtype),
-                _stat_encode(fb, meta.dtype, upper=True),
-            ]
-            entries = [fill_pair] * n_cells
-            if appending:
-                # remap old entries onto the grown grid's C-order
-                # ordinals (the append axis changes every ordinal
-                # behind it); boundary cells' bounds union with the
-                # fill their extension materializes; stats-less /
-                # wrong-length old lists degrade to unknown, and the
-                # write tasks overwrite every cell they touched below
-                g_old = [
-                    -(-len(old_axes[d]) // int(cs))
-                    for d, cs in zip(dims, cell_shape)
-                ]
-                from .zarr.stats import resolve_stats as _resolve
-
-                s = _resolve(store, c, old_stats.get(c))
-                old_entries = s if isinstance(s, list) else None
-                n_old = 1
-                for g in g_old:
-                    n_old *= g
-                if old_entries is not None and len(old_entries) != n_old:
-                    old_entries = None  # provably stale
-                old_len = len(old_axes[append_dim])
-                cs_a = int(cell_shape[ax_i])
-                boundary = old_len // cs_a if old_len % cs_a else None
-                for t in _it.product(*(range(g) for g in g_old)):
-                    new_ord = 0
-                    old_ord = 0
-                    for i, gn, go in zip(t, grid, g_old):
-                        new_ord = new_ord * gn + i
-                        old_ord = old_ord * go + i
-                    e = (
-                        old_entries[old_ord]
-                        if old_entries is not None
-                        else None
-                    )
-                    if t[ax_i] == boundary:
-                        e = _union_stat_bounds(e, fill_pair)
-                    entries[new_ord] = e
-            per_col[c] = entries
-        for r in result_rows:
-            decoded = json.loads(r["stats"])
-            for c, pair in decoded.items():
-                if c in per_col:
-                    # slot assignment replaces the shared fill-pair
-                    # reference; the remaining aliases are never
-                    # mutated in place
-                    per_col[c][int(r["cell"])] = pair
-        from .zarr.stats import store_stats as _store_stats
-
-        for c, entries in per_col.items():
-            # inline up to the cap, sharded sidecar past it — a
-            # past-cap grid store keeps its planning-time pruning
-            metas[c].attributes[STATS_ATTR_KEY] = _store_stats(
-                store, c, entries, STATS_MAX_OBJECTS
+        merge = StatsMerge(grid)
+    with _commit_job(
+        committed, want_stats, merge.n_entries <= STATS_MAX_OBJECTS
+    ) as (written, stats_rows):
+        if want_stats:
+            stat_metas = _eligible(metas)
+            _merge_stats(
+                spark, store, path, stat_metas, merge, stats_rows,
+                old_stats, _fill_pairs(stat_metas, fills),
             )
             if not appending:
-                store.set(
-                    f"{c}/zarr.json",
-                    json.dumps(metas[c].to_json()).encode(),
-                )
+                # an append republishes every array's metadata below;
+                # writing it here would expose the grown stats before
+                # the grown shape
+                for c in stat_metas:
+                    store.set(
+                        f"{c}/zarr.json",
+                        json.dumps(metas[c].to_json()).encode(),
+                    )
     if appending:
         # every chunk has landed — NOW grow the store: the append
         # dim's coordinate data first (objects are padded-full, so
@@ -2662,147 +2120,42 @@ def diff_zarr(
     return out
 
 
-def _refresh_stats_distributed(spark, store, path: str, meta) -> Dict:
-    """The past-cutover tier of :func:`refresh_stats` for ONE array —
-    r11, closing the last writer-family driver-assembly term: no
-    per-object work list, collected row set, or entry list ever
-    materializes on the driver.
-
-    Shape (the grid writers' sidecar machinery,
-    :func:`_assemble_grid_stats_sidecar`): the work list is
-    ``spark.range`` over chunk ordinals (pure metadata arithmetic);
-    per-object [lo, hi] pairs compute in ``mapInPandas`` tasks (one
-    decode per object, missing objects bound to the fill value they
-    materialize as — ``read_chunk``'s contract); then one task per
-    64Ki-ordinal group writes each COMPLETE sidecar block — every
-    ordinal appears exactly once, so blocks need no seed/merge pass.
-    The only shuffle moves ~50-byte pair rows. Returns the attribute
-    value to publish — inline entries at or under STATS_MAX_OBJECTS
-    (a bounded collect), else the sidecar marker (the caller's
-    metadata-last commit makes it visible; until then a reader
-    resolves the OLD attribute — overwritten blocks are the append
-    path's documented advisory-metadata caveat)."""
-    import pandas as pd
-
+def _refresh_rows(spark, path: str, meta) -> DataFrame:
+    """The past-cutover recompute of :func:`refresh_stats` for ONE
+    array, as ``(cell, stats)`` commit rows: the work list is
+    ``spark.range`` over chunk ordinals (pure metadata arithmetic) and
+    each pair computes in a ``mapInPandas`` task (one decode per
+    object; a missing object bounds to the fill value it materializes
+    as — ``read_chunk``'s contract). No per-object work list or
+    collected row set exists on the driver."""
     from .zarr.array import ZarrArray
-    from .zarr.stats import (
-        STATS_BLOCK_ENTRIES,
-        block_key,
-        is_sidecar_marker,
-    )
 
-    blk = STATS_BLOCK_ENTRIES
     n_obj = int(meta.chunk_grid_shape[0])
-    n_blocks = -(-n_obj // blk)
     sc = spark.sparkContext
-    path_t = path
     meta_b = sc.broadcast(meta)
 
     def compute(batches):
-        task_store = open_store(path_t)
+        task_store = open_store(path)
         m = meta_b.value
         arr = ZarrArray(task_store, m)
         for pdf in batches:
-            ords, pairs = [], []
-            for i in pdf["id"]:
-                block = np.asarray(
-                    arr.read_chunk((int(i),)), dtype=m.dtype
+            stats = [
+                json.dumps(
+                    {
+                        m.name: _block_stat_pair(
+                            np.asarray(arr.read_chunk((int(i),)), m.dtype),
+                            m,
+                        )
+                    }
                 )
-                ords.append(int(i))
-                pairs.append(
-                    json.dumps(
-                        [
-                            _stat_encode(np.min(block), m.dtype),
-                            _stat_encode(
-                                np.max(block), m.dtype, upper=True
-                            ),
-                        ]
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "ord": pd.Series(ords, dtype="int64"),
-                    "pair": pairs,
-                }
-            )
+                for i in pdf["id"]
+            ]
+            yield pd.DataFrame({"cell": pdf["id"], "stats": stats})
 
     n_parts = max(1, min(n_obj, sc.defaultParallelism * 2))
-    rows = spark.range(0, n_obj, 1, n_parts).mapInPandas(
-        compute, "ord long, pair string"
+    return spark.range(0, n_obj, 1, n_parts).mapInPandas(
+        compute, "cell long, stats string"
     )
-
-    if n_obj <= STATS_MAX_OBJECTS:
-        # representation invariant holds regardless of which tier
-        # computed: inline at or under the inline cap (a bounded
-        # collect — ≤ 64Ki pair rows — which is the cap's own bound,
-        # not an O(n_objects) term). Reachable when the tier cutover
-        # sits below the inline cap (tests force it to 0).
-        from .zarr.stats import store_stats
-
-        entries = [None] * n_obj
-        for r in rows.collect():
-            entries[int(r["ord"])] = json.loads(r["pair"])
-        return store_stats(store, meta.name, entries, STATS_MAX_OBJECTS)
-
-    blk_t = blk
-    n_obj_t = n_obj
-    name_t = meta.name
-
-    def write_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["__blk"].iloc[0])
-        base_len = min(blk_t, n_obj_t - b * blk_t)
-        entries = [None] * base_len
-        for o, p in zip(pdf["ord"], pdf["pair"]):
-            slot = int(o) - b * blk_t
-            if not (0 <= slot < base_len):
-                raise ZarrFormatError(
-                    f"refresh_stats sidecar: ordinal {int(o)} outside "
-                    f"block {b} (block_entries={blk_t}, "
-                    f"base_len={base_len})"
-                )
-            entries[slot] = json.loads(p)
-        if any(e is None for e in entries):
-            raise ZarrFormatError(
-                f"refresh_stats sidecar: block {b} incomplete "
-                f"({sum(e is None for e in entries)} missing slots)"
-            )
-        task_store = open_store(path_t)
-        task_store.set(
-            block_key(name_t, b), json.dumps(entries).encode()
-        )
-        return pd.DataFrame({"blk": [b]})
-
-    (
-        rows.withColumn("__blk", F.expr(f"ord div {blk}"))
-        .groupBy("__blk")
-        .applyInPandas(write_block, "blk long")
-        .count()
-    )
-    # a previous, LARGER sidecar — or a TORN prior refresh that wrote
-    # blocks without ever updating the marker — leaves stale tail
-    # blocks the new marker doesn't advertise. Walk the array's
-    # sidecar prefix and drop every block past the new count: the
-    # walk is O(actual blocks), a store-listing term, never an entry
-    # list (r13, the r11 ADVICE fix — the old sweep trusted the OLD
-    # marker's count and missed unadvertised debris).
-    from .zarr.stats import STATS_SIDECAR_PREFIX
-
-    prefix = f"{STATS_SIDECAR_PREFIX}/{meta.name}/"
-    for key in list(store.walk_prefix(prefix)):
-        tail = key[len(prefix):]
-        if not tail.endswith(".json"):
-            continue
-        try:
-            b = int(tail[: -len(".json")])
-        except ValueError:
-            continue
-        if b >= n_blocks:
-            store.delete(key)
-    return {
-        "sidecar": int(n_blocks),
-        "n_entries": int(n_obj),
-        "block_entries": int(blk),
-    }
 
 
 def refresh_stats(
@@ -2823,12 +2176,13 @@ def refresh_stats(
     table layout; grid stores get their stats from
     :func:`write_zarr_grid`).
 
-    Two tiers on STATS_GRID_MAX_OBJECTS (r11 — a cutover, not a
-    capability bound): at or under it the per-object rows collect and
-    the driver assembles entry lists (one job, small-store latency);
-    past it :func:`_refresh_stats_distributed` writes complete
-    sidecar blocks executor-side with no driver list anywhere, so
-    arbitrarily large third-party stores can be retrofitted."""
+    Two tiers on STATS_GRID_MAX_OBJECTS (a cutover, not a capability
+    bound): at or under it the per-object rows collect and the driver
+    merges them (one job, small-store latency); past it
+    :func:`_refresh_rows` computes them in tasks and the merge writes
+    each sidecar block executor-side with no driver list anywhere, so
+    arbitrarily large third-party stores can be retrofitted. Either
+    way an incomplete recompute raises."""
     from .zarr.array import ZarrArray, infer_store_arrays_authoritative
 
     store = open_store(path)
@@ -2845,11 +2199,6 @@ def refresh_stats(
                 f"refresh_stats: no such 1-D arrays {sorted(missing)}"
             )
         arrays = [a for a in arrays if a.meta.name in wanted]
-    # past STATS_MAX_OBJECTS the recomputed entries land in sidecar
-    # blocks (zarr/stats.py) — refresh is also the MIGRATION verb
-    # between the two representations. Tier split: small arrays keep
-    # the driver-assembly form; past STATS_GRID_MAX_OBJECTS the
-    # recompute distributes end-to-end (r11).
     targets = []
     targets_dist = []
     for a in arrays:
@@ -2864,9 +2213,8 @@ def refresh_stats(
         for a in targets
         for i in range(a.meta.chunk_grid_shape[0])
     ]
-    metas = {a.meta.name: a.meta for a in targets}
     sc = spark.sparkContext
-    metas_b = sc.broadcast(metas)
+    metas_b = sc.broadcast({a.meta.name: a.meta for a in targets})
 
     def compute(items):
         task_store = open_store(path)
@@ -2874,16 +2222,7 @@ def refresh_stats(
             meta = metas_b.value[name]
             block = ZarrArray(task_store, meta).read_chunk((i,))
             block = np.asarray(block, dtype=meta.dtype)
-            yield (
-                name,
-                i,
-                json.dumps(
-                    [
-                        _stat_encode(np.min(block), meta.dtype),
-                        _stat_encode(np.max(block), meta.dtype, upper=True),
-                    ]
-                ),
-            )
+            yield name, i, _block_stat_pair(block, meta)
 
     if n_partitions is None:
         n_partitions = sc.defaultParallelism * 2
@@ -2894,31 +2233,29 @@ def refresh_stats(
         if work
         else []
     )
-    from .zarr.stats import delete_sidecar, store_stats
-
-    per_col: Dict[str, list] = {
-        n: [None] * m.chunk_grid_shape[0] for n, m in metas.items()
-    }
+    written: Dict[str, Dict[int, list]] = {}
     for name, i, pair in rows:
-        per_col[name][i] = json.loads(pair)
-    # inline-vs-sidecar decided per array by store_stats: past-cap
-    # entry lists become sharded blocks + a marker attribute (and a
-    # rechunk-to-bigger-objects store migrates back to inline)
-    attr_vals = {
-        n: store_stats(store, n, entries, STATS_MAX_OBJECTS)
-        for n, entries in per_col.items()
-    }
-    n_computed_dist = 0
-    for a in targets_dist:
-        attr_vals[a.meta.name] = _refresh_stats_distributed(
-            spark, store, path, a.meta
+        written.setdefault(name, {})[i] = pair
+    # inline or sidecar by entry count: refresh is also the MIGRATION
+    # verb between the two representations
+    for a in targets + targets_dist:
+        m = a.meta
+        _merge_stats(
+            spark, store, path, {m.name: m},
+            StatsMerge(m.chunk_grid_shape[:1]),
+            (
+                {m.name: written.get(m.name, {})}
+                if a in targets
+                else _refresh_rows(spark, path, m)
+            ),
+            complete=True,
         )
-        n_computed_dist += int(a.meta.chunk_grid_shape[0])
+    computed = {a.meta.name for a in targets + targets_dist}
+    from .zarr.stats import delete_sidecar
+
     for a in arrays:
         m = a.meta
-        if m.name in attr_vals:
-            m.attributes[STATS_ATTR_KEY] = attr_vals[m.name]
-        else:
+        if m.name not in computed:
             m.attributes.pop(STATS_ATTR_KEY, None)
             delete_sidecar(store, m.name)
         if store.exists(f"{m.name}/.zarray"):
@@ -2927,8 +2264,8 @@ def refresh_stats(
             # zarr.json here would mix formats in one array dir
             raw = store.get(f"{m.name}/.zattrs")
             zattrs = json.loads(raw) if raw else {}
-            if m.name in attr_vals:
-                zattrs[STATS_ATTR_KEY] = attr_vals[m.name]
+            if m.name in computed:
+                zattrs[STATS_ATTR_KEY] = m.attributes[STATS_ATTR_KEY]
             else:
                 zattrs.pop(STATS_ATTR_KEY, None)
             store.set(
@@ -2939,7 +2276,9 @@ def refresh_stats(
                 f"{m.name}/zarr.json", json.dumps(m.to_json()).encode()
             )
     _refresh_store_cache(store)
-    return len(rows) + n_computed_dist
+    return len(rows) + sum(
+        int(a.meta.chunk_grid_shape[0]) for a in targets_dist
+    )
 
 
 def describe_zarr(path: str, stats_blocks: bool = False) -> dict:
@@ -3170,26 +2509,9 @@ def write_zarr_region(
     # :func:`refresh_stats` repairs a store left invalidated by a
     # crashed job. With stats=True the recomputed bounds republish
     # after the write lands.
-    n_cells = 1
-    for g in grid:
-        n_cells *= g
-    pre_dirty = False
-    _nulls = {int(o): None for o in touched_cells}
-    for c in data_cols:
-        meta = metas[c]
-        if meta.attributes.get(STATS_ATTR_KEY) is None:
-            continue  # no recorded stats -> nothing stale to clear
-        # both representations: inline mutates the attribute (True ->
-        # republish), a sidecar marker patches only the touched blocks
-        if _patch_stats(store, meta, c, _nulls, n_cells):
-            store.set(
-                f"{c}/zarr.json", json.dumps(meta.to_json()).encode()
-            )
-            pre_dirty = True
-    if pre_dirty:
-        from .zarr.writer import consolidate_metadata
-
-        consolidate_metadata(store)
+    merge = StatsMerge(grid, grid)
+    nulls = {int(o): None for o in touched_cells}
+    _update_stats_in_place(store, path, metas, merge, {c: nulls for c in metas})
 
     metas_b = spark.sparkContext.broadcast(metas)
     chunk_shape_t = tuple(int(x) for x in chunk_shape)
@@ -3238,33 +2560,9 @@ def write_zarr_region(
     committed = out.groupBy("__cell").applyInPandas(
         update_cell, schema="cell long, rows long, stats string"
     )
-    written, result_rows = _commit_totals(committed, want_stats)
-    if want_stats:
-        touched: Dict[str, Dict[int, list]] = {c: {} for c in data_cols}
-        for r in result_rows:
-            decoded = json.loads(r["stats"])
-            for c, pair in decoded.items():
-                touched[c][int(r["cell"])] = pair
-        for c in data_cols:
-            meta = metas[c]
-            if not _stats_eligible(meta.dtype) or not touched[c]:
-                continue
-            if (
-                meta.attributes.get(STATS_ATTR_KEY) is None
-                and n_cells <= STATS_MAX_OBJECTS
-            ):
-                # stats-less sub-cap store: seed an all-unknown list
-                # so the freshly computed bounds stick; a stats-less
-                # past-cap store stays stats-less (refresh_stats /
-                # a full grid rewrite is the deliberate rebuild)
-                meta.attributes[STATS_ATTR_KEY] = [None] * n_cells
-            if _patch_stats(store, meta, c, touched[c], n_cells):
-                store.set(
-                    f"{c}/zarr.json", json.dumps(meta.to_json()).encode()
-                )
-        from .zarr.writer import consolidate_metadata
-
-        consolidate_metadata(store)
+    with _commit_job(committed, want_stats, True) as (written, touched):
+        if want_stats:
+            _update_stats_in_place(store, path, metas, merge, touched)
     return written
 
 
@@ -3536,21 +2834,12 @@ def upsert_zarr(
         # objects' bounds NULL before any chunk mutates — in both the
         # inline and sidecar representations (a stale sidecar
         # advertising pre-update bounds would be an UNSOUND prune)
-        pre_dirty = False
+        data_metas = {c: metas[c] for c in data_cols}
+        merge = StatsMerge((n_objects,), (n_objects,))
         nulls = {i: None for i in touched}
-        for c in data_cols:
-            meta = metas[c]
-            if meta.attributes.get(STATS_ATTR_KEY) is None:
-                continue
-            if _patch_stats(store, meta, c, nulls, n_objects):
-                store.set(
-                    f"{c}/zarr.json", json.dumps(meta.to_json()).encode()
-                )
-                pre_dirty = True
-        if pre_dirty:
-            from .zarr.writer import consolidate_metadata
-
-            consolidate_metadata(store)
+        _update_stats_in_place(
+            store, path, data_metas, merge, {c: nulls for c in data_cols}
+        )
 
         metas_b = sc.broadcast(metas)
         data_cols_t = list(data_cols)
@@ -3582,39 +2871,11 @@ def upsert_zarr(
         committed = matched.groupBy("__obj").applyInPandas(
             patch_object, schema="cell long, rows long, stats string"
         )
-        updated_rows, result_rows = _commit_totals(committed, want_stats)
-        if want_stats:
-            per_col: Dict[str, Dict[int, list]] = {c: {} for c in data_cols}
-            for r in result_rows:
-                for c, pair in json.loads(r["stats"]).items():
-                    per_col[c][int(r["cell"])] = pair
-            post_dirty = False
-            for c in data_cols:
-                meta = metas[c]
-                if not _stats_eligible(meta.dtype) or not per_col[c]:
-                    continue
-                if (
-                    meta.attributes.get(STATS_ATTR_KEY) is None
-                    and n_objects <= STATS_MAX_OBJECTS
-                ):
-                    # stats-less sub-cap store: seed an all-unknown
-                    # list so the freshly computed bounds stick
-                    # (pre-round-8 behavior); a stats-less PAST-cap
-                    # store stays stats-less — refresh_stats is the
-                    # deliberate full rebuild there
-                    meta.attributes[STATS_ATTR_KEY] = (
-                        [None] * n_objects
-                    )
-                if _patch_stats(store, meta, c, per_col[c], n_objects):
-                    store.set(
-                        f"{c}/zarr.json",
-                        json.dumps(meta.to_json()).encode(),
-                    )
-                    post_dirty = True
-            if post_dirty:
-                from .zarr.writer import consolidate_metadata
-
-                consolidate_metadata(store)
+        with _commit_job(committed, want_stats, True) as (
+            updated_rows, restat
+        ):
+            if want_stats:
+                _update_stats_in_place(store, path, data_metas, merge, restat)
 
     inserted = 0
     if on_missing == "insert" and n_matched_keys < n_updates:
@@ -3802,14 +3063,6 @@ def add_zarr_arrays(
     data_cols_t = list(data_cols)
     grid_t = list(grid)
     fills_t = dict(fills)
-    _n_cells_planned = 1
-    for _g in grid:
-        _n_cells_planned *= _g
-    # past the inline cap the sidecar assembles DISTRIBUTED (r10 —
-    # add-column has no old-ordinal remap: the grid is unchanged, so
-    # the fresh-create block assembly applies verbatim); no driver
-    # bound remains on this verb either
-    sidecar_grid = bool(stats) and _n_cells_planned > STATS_MAX_OBJECTS
     want_stats = bool(stats)
 
     def write_new_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3845,51 +3098,18 @@ def add_zarr_arrays(
     committed = out.groupBy("__cell").applyInPandas(
         write_new_cell, schema="cell long, rows long, stats string"
     )
-    if sidecar_grid:
-        # distributed block assembly, fresh-create shape (persist so
-        # the chunk-writing stage runs exactly once)
-        committed = committed.persist()
-        try:
-            written, _ = _commit_totals(committed, False)
-            markers = _assemble_grid_stats_sidecar(
-                spark, store, path, committed, metas, data_cols,
-                fills, _n_cells_planned,
-            )
-        finally:
-            committed.unpersist()
-        for c, marker in markers.items():
-            metas[c].attributes[STATS_ATTR_KEY] = marker
-        result_rows = None
-    else:
-        written, result_rows = _commit_totals(committed, want_stats)
-
     # every chunk has landed — NOW publish: per-array metadata (with
     # stats: provided cells from the tasks, absent cells are pure
     # fill, exactly what a reader materializes), then the root cache
-    if want_stats and not sidecar_grid:
-        n_cells = 1
-        for g in grid:
-            n_cells *= g
-        touched: Dict[str, Dict[int, list]] = {c: {} for c in data_cols}
-        for r in result_rows:
-            for c, pair in json.loads(r["stats"]).items():
-                touched[c][int(r["cell"])] = pair
-        for c in data_cols:
-            meta = metas[c]
-            if not _stats_eligible(meta.dtype):
-                continue
-            fb = np.asarray(fills[c], dtype=meta.dtype)
-            fill_pair = [
-                _stat_encode(fb, meta.dtype),
-                _stat_encode(fb, meta.dtype, upper=True),
-            ]
-            entries = [fill_pair] * n_cells
-            for ordv, pair in touched[c].items():
-                entries[ordv] = pair
-            from .zarr.stats import store_stats as _store_stats
-
-            meta.attributes[STATS_ATTR_KEY] = _store_stats(
-                store, c, entries, STATS_MAX_OBJECTS
+    merge = StatsMerge(grid)
+    with _commit_job(
+        committed, want_stats, merge.n_entries <= STATS_MAX_OBJECTS
+    ) as (written, stats_rows):
+        if want_stats:
+            stat_metas = _eligible(metas)
+            _merge_stats(
+                spark, store, path, stat_metas, merge, stats_rows,
+                fills=_fill_pairs(stat_metas, fills),
             )
     for c in data_cols:
         store.set(

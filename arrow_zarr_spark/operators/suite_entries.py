@@ -4267,13 +4267,13 @@ def populate_round10_maint_queries(register) -> None:
     )
 
     def w17(spark, sf_dir):
-        # w17: grid APPEND with the r10 DISTRIBUTED stats remap,
-        # proven by a stats-pruned scan. STATS_MAX_OBJECTS drops to 4
-        # so both writes cross the inline cap: the create assembles
-        # sidecar blocks distributed (r9) and the unaligned append
-        # routes through _assemble_grid_append_stats_sidecar — old
-        # ordinals remapped to the grown grid as a keys-only Spark
-        # job (mixed-radix arithmetic, io.py). The filter selects
+        # w17: grid APPEND with the DISTRIBUTED stats remap, proven
+        # by a stats-pruned scan. STATS_MAX_OBJECTS drops to 4 so both
+        # writes cross the inline cap: the create and the unaligned
+        # append merge their sidecar blocks in tasks through the one
+        # statistics merge (io.py::_merge_stats; old ordinals remap
+        # to the grown grid by mixed-radix arithmetic,
+        # zarr/stats.py::StatsMerge). The filter selects
         # only the appended region, so a remap that misplaced or
         # widened a bound flips rows (wrong prune = missing rows;
         # stats are upper/lower bounds so extra rows are impossible

@@ -41,15 +41,17 @@ from pyspark.sql.datasource import (
 )
 
 from .io import (
+    _block_stat_pair,
     _clear_store,
-    _existing_stats,
-    _np_dtype_for,
-    _stat_encode,
+    _eligible,
+    _merge_stats,
+    _recorded_stats,
     _stats_eligible,
     _zarr_dtype_for,
 )
 from .zarr.codecs import default_codecs, encode_chunk
-from .zarr.meta import STATS_ATTR_KEY, ArrayMeta, ZarrFormatError
+from .zarr.meta import ArrayMeta, ZarrFormatError
+from .zarr.stats import StatsMerge
 from .zarr.store import open_store
 from .zarr.writer import write_chunk, write_root_group
 
@@ -304,12 +306,7 @@ class ZarrWriter(DataSourceArrowWriter):
                         ),
                     )
                     if self.stats and _stats_eligible(metas[n].dtype):
-                        obj_stats[n] = [
-                            _stat_encode(np.min(head), metas[n].dtype),
-                            _stat_encode(
-                                np.max(head), metas[n].dtype, upper=True
-                            ),
-                        ]
+                        obj_stats[n] = _block_stat_pair(head, metas[n])
                 chunk_stats.append(obj_stats)
                 buffered -= self.chunk_rows
                 n_full += 1
@@ -381,25 +378,13 @@ class ZarrWriter(DataSourceArrowWriter):
             self.compression,
         )
 
-        # per-object stats, assembled in the SAME chunk-position order
-        # as the renames/writes below; appends retain old entries when
-        # the existing store carried stats of the expected length
-        # (stats disabled -> metas stay attribute-free, so stale stats
-        # can never survive a layout change)
-        n_units = -(-total_rows // eff_chunk) if total_rows else 0
-        per_col: Dict[str, list] = (
-            {
-                n: [None] * n_units
-                for n in names
-                if _stats_eligible(metas[n].dtype)
-            }
-            if self.stats
-            else {}
-        )
-        if per_col and base_rows:
-            for n, entries in _existing_stats(store, set(per_col)).items():
-                if len(entries) == base_chunks:
-                    per_col[n][:base_chunks] = entries
+        # per-object stats of the chunks this commit places, keyed by
+        # the same chunk positions as the renames/writes below (stats
+        # disabled -> metas stay attribute-free, so stale stats can
+        # never survive a layout change)
+        stat_metas = _eligible(metas) if self.stats else {}
+        written: Dict[str, Dict[int, list]] = {n: {} for n in stat_metas}
+        olds = _recorded_stats(store, set(stat_metas)) if base_rows else {}
 
         # 1) staged full chunks -> global positions (rename, no copy);
         #    their stats rode the commit messages, no re-read needed
@@ -412,10 +397,10 @@ class ZarrWriter(DataSourceArrowWriter):
                         f"{self._stage(m.task_id)}/{i}/{n}",
                         f"{n}/{metas[n].chunk_key((next_chunk,))}",
                     )
-                if per_col and i < len(m_stats):
+                if i < len(m_stats):
                     for n, pair in m_stats[i].items():
-                        if n in per_col:
-                            per_col[n][next_chunk] = pair
+                        if n in written:
+                            written[n][next_chunk] = pair
                 next_chunk += 1
 
         # 2) leftovers (each < chunk_rows) -> packed tail chunks
@@ -439,68 +424,33 @@ class ZarrWriter(DataSourceArrowWriter):
                 for n in names:
                     part = packed[n][pos : pos + take]
                     write_chunk(store, metas[n], (next_chunk,), part)
-                    if n in per_col:
-                        part = np.asarray(part, dtype=metas[n].dtype)
-                        per_col[n][next_chunk] = [
-                            _stat_encode(np.min(part), metas[n].dtype),
-                            _stat_encode(
-                                np.max(part), metas[n].dtype, upper=True
-                            ),
-                        ]
+                    if n in written:
+                        written[n][next_chunk] = _block_stat_pair(
+                            np.asarray(part, dtype=metas[n].dtype), metas[n]
+                        )
                 next_chunk += 1
                 pos += take
 
         # 3) metadata LAST — concurrent readers / the zarr-stream source
         #    trust the advertised shape, so every chunk must land first.
         #    Root doc goes last of all, carrying the consolidated block
-        #    (readers plan each poll from one GET).
+        #    (readers plan each poll from one GET). Past the inline cap
+        #    the entries go to sidecar blocks, so a long-running stream
+        #    can never grow zarr.json into an unparseable planning
+        #    document; an append rewrites only the blocks from the old
+        #    end onward, with no delete-then-rewrite window (a reader
+        #    holding the old marker sees consistent old blocks until
+        #    the new metadata publishes; an extended boundary block
+        #    fails its length check and degrades to no-pruning, never
+        #    to wrong).
         import json
 
-        from .io import STATS_MAX_OBJECTS
-        from .zarr.stats import (
-            STATS_BLOCK_ENTRIES,
-            block_key,
-            delete_sidecar,
-            is_sidecar_marker,
+        n_units = -(-total_rows // eff_chunk) if total_rows else 0
+        _merge_stats(
+            None, store, self.path, stat_metas,
+            StatsMerge((n_units,), (base_chunks,) if base_chunks else None),
+            written, olds,
         )
-
-        for n, entries in per_col.items():
-            # inline up to the cap; past it the entries go to sidecar
-            # blocks so a long-running stream can never grow zarr.json
-            # into an unparseable planning document. The sidecar write
-            # is INCREMENTAL per microbatch (r8 review finding): when
-            # the previous commit already published an aligned sidecar
-            # covering the old prefix, only the boundary block onward
-            # is rewritten — an append-only stream never re-serializes
-            # its whole history, and there is no delete-then-rewrite
-            # window for concurrent readers (a reader holding the old
-            # marker sees consistent old blocks until the new metadata
-            # publishes; an extended boundary block fails its length
-            # check and degrades to no-pruning, never to wrong).
-            if len(entries) <= STATS_MAX_OBJECTS:
-                delete_sidecar(store, n)  # cheap no-op in steady state
-                metas[n].attributes[STATS_ATTR_KEY] = entries
-                continue
-            blk = STATS_BLOCK_ENTRIES
-            old_attr = metas[n].attributes.get(STATS_ATTR_KEY)
-            start_blk = 0
-            if (
-                is_sidecar_marker(old_attr)
-                and old_attr.get("block_entries") == blk
-                and old_attr.get("n_entries") == base_chunks
-            ):
-                start_blk = base_chunks // blk
-            n_blocks = -(-len(entries) // blk)
-            for b in range(start_blk, n_blocks):
-                store.set(
-                    block_key(n, b),
-                    json.dumps(entries[b * blk : (b + 1) * blk]).encode(),
-                )
-            metas[n].attributes[STATS_ATTR_KEY] = {
-                "sidecar": n_blocks,
-                "n_entries": len(entries),
-                "block_entries": blk,
-            }
         for n in names:
             store.set(f"{n}/zarr.json", json.dumps(metas[n].to_json()).encode())
         write_root_group(
@@ -511,10 +461,10 @@ class ZarrWriter(DataSourceArrowWriter):
 
     def abort(self, messages) -> None:
         store = open_store(self.path)
-        prefix = f"__stage__/{self.job_id}/"
-        for key in list(store.walk_keys()):
-            if key.startswith(prefix):
-                store.delete(key)
+        # this job's staging subtree only: listing the whole store
+        # would cost every chunk key of the target per commit
+        for key in list(store.walk_prefix(f"__stage__/{self.job_id}")):
+            store.delete(key)
         # tidy empty local staging dirs (best effort)
         import os as _os
         import shutil as _shutil

@@ -823,3 +823,159 @@ def test_pack_runs_properties(grid_runs, by_count, knob, parts_max):
         per = max(knob, -(-n_cells // parts_max))
         assert len(parts) <= parts_max
         assert all(n == per for n in sizes[:-1]) and sizes[-1] <= per
+
+
+class _DictStore:
+    """In-memory key-value store counting its SETs (the statistics
+    merge only gets, sets, deletes and lists a prefix)."""
+
+    def __init__(self):
+        self.data = {}
+        self.sets = []
+
+    def get(self, key):
+        return self.data.get(key)
+
+    def set(self, key, value):
+        self.sets.append(key)
+        self.data[key] = value
+
+    def delete(self, key):
+        self.data.pop(key, None)
+
+    def walk_prefix(self, prefix):
+        p = prefix if prefix.endswith("/") else prefix + "/"
+        return [k for k in self.data if k.startswith(p)]
+
+
+def _reference_merge(grid, old_grid, axis, boundary, old, written, fill):
+    """Brute force: the grid writer's former driver-side remap
+    (every old cell enumerated with itertools.product, its old and new
+    C-order ordinals accumulated digit by digit)."""
+    import itertools
+
+    def union(e, f):
+        if not e or not f or None in e or None in f:
+            return None
+        return [min(e[0], f[0]), max(e[1], f[1])]
+
+    entries = [fill] * int(np.prod(grid))
+    if old_grid is not None:
+        for t in itertools.product(*(range(g) for g in old_grid)):
+            new_ord = old_ord = 0
+            for i, gn, go in zip(t, grid, old_grid):
+                new_ord = new_ord * gn + i
+                old_ord = old_ord * go + i
+            e = old[old_ord] if old is not None else None
+            if t[axis] == boundary:
+                e = union(e, fill)
+            entries[new_ord] = e
+    for o, pair in written.items():
+        entries[o] = pair
+    return entries
+
+
+@st.composite
+def stats_merge_cases(draw):
+    ndim = draw(st.integers(1, 3))
+    axis = draw(st.integers(0, ndim - 1))
+    fresh = draw(st.booleans())
+    old_grid = [draw(st.integers(1, 4)) for _ in range(ndim)]
+    grid = list(old_grid)
+    grid[axis] += draw(st.integers(0, 3))
+    fill = draw(st.sampled_from([None, [-1, -1]]))
+    boundary = (
+        old_grid[axis] - 1
+        if fill is not None and not fresh and draw(st.booleans())
+        else None
+    )
+    n, n_old = int(np.prod(grid)), int(np.prod(old_grid))
+    written = {
+        o: draw(st.sampled_from([None, [o * 10, o * 10 + 5]]))
+        for o in draw(st.sets(st.integers(0, n - 1), max_size=n))
+    }
+    old_kind = draw(st.sampled_from(["inline", "sidecar", "absent", "stale"]))
+    old = [
+        draw(st.sampled_from([None, [i, i + 3]])) for i in range(n_old)
+    ]
+    old_blk = draw(st.integers(1, 5))
+    return dict(
+        grid=grid, old_grid=None if fresh else old_grid, axis=axis,
+        boundary=boundary, fill=fill, written=written, old=old,
+        old_kind=old_kind, old_blk=old_blk,
+        blk=draw(st.sampled_from([old_blk, draw(st.integers(1, 5))])),
+        max_inline=draw(st.sampled_from([0, 1 << 20])),
+    )
+
+
+@given(case=stats_merge_cases())
+@settings(max_examples=300, deadline=None)
+def test_stats_merge_matches_reference(case):
+    """The one statistics merge of every write verb
+    (zarr/stats.py): for random 1-3-D grids grown along a random
+    axis, random written cells (pairs or invalidating Nones), old
+    statistics inline / in sidecar blocks (of another block size too)
+    / absent / of the wrong length, and tiny block sizes, the published
+    entries equal the brute-force remap; entries built block by block
+    equal those built in one call; and a sidecar rewrite sets only
+    blocks holding a changed slot and leaves no block past its count."""
+    from arrow_zarr_spark.zarr import stats as S
+
+    c = case
+    store = _DictStore()
+    saved = S.STATS_BLOCK_ENTRIES
+    try:
+        S.STATS_BLOCK_ENTRIES = c["old_blk"]
+        n_old = len(c["old"])
+        value = None
+        if c["old_kind"] == "inline":
+            value = list(c["old"])
+        elif c["old_kind"] == "sidecar":
+            value = S.store_stats(store, "a", c["old"], 0)
+        elif c["old_kind"] == "stale":
+            value = S.store_stats(store, "a", c["old"] + [[0, 0]], 0)
+        usable = c["old_kind"] in ("inline", "sidecar")
+        S.STATS_BLOCK_ENTRIES = blk = c["blk"]
+
+        merge = S.StatsMerge(
+            c["grid"], c["old_grid"], c["axis"], c["boundary"]
+        )
+        n = merge.n_entries
+        old = S.RecordedStats(
+            store, "a", value, n_old if c["old_grid"] else 0
+        )
+        want = _reference_merge(
+            c["grid"], c["old_grid"], c["axis"], c["boundary"],
+            c["old"] if usable else None, c["written"], c["fill"],
+        )
+        whole = S.merge_entries(merge, 0, n, c["written"], old, c["fill"])
+        by_block = [
+            e
+            for b in range(-(-n // blk))
+            for e in S.merge_entries(
+                merge, b * blk, min(n, (b + 1) * blk), c["written"], old,
+                c["fill"],
+            )
+        ]
+        assert whole == by_block == want
+
+        store.sets.clear()
+        published = S.store_merged(
+            store, "a", merge, c["written"], old, c["fill"],
+            c["max_inline"],
+        )
+        assert S.resolve_stats(store, "a", published) == want
+        n_blocks = 0 if isinstance(published, list) else -(-n // blk)
+        assert all(
+            int(k.split("/")[-1][: -len(".json")]) < n_blocks
+            for k in store.walk_prefix(f"{S.STATS_SIDECAR_PREFIX}/a")
+        )
+        if n_blocks and c["old_kind"] == "sidecar" and c["old_blk"] == blk:
+            kept_below = merge.first_changed() // blk
+            for key in store.sets:
+                b = int(key.split("/")[-1][: -len(".json")])
+                assert b >= kept_below or any(
+                    b * blk <= o < (b + 1) * blk for o in c["written"]
+                )
+    finally:
+        S.STATS_BLOCK_ENTRIES = saved

@@ -573,9 +573,9 @@ class TestBlockStreaming:
 
 
 class TestDistributedAppendStats:
-    """r10: the grid APPEND's stats assembly past the inline cap runs
-    fully distributed (_assemble_grid_append_stats_sidecar) — the
-    old-ordinal remap is a keys-only Spark job, no entry list ever
+    """r10: the grid APPEND's stats merge past the inline cap runs
+    fully distributed (io.py::_merge_stats, one task per changed
+    block) — old ordinals remap in the tasks, no entry list ever
     materializes on the driver, and the former STATS_GRID_MAX_OBJECTS
     skip is gone from every grid write verb."""
 

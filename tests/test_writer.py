@@ -251,6 +251,51 @@ class TestFormatWriter:
         got = sorted(r.x for r in back.collect())
         assert got == list(range(64)) + list(range(100, 110))
 
+    def test_commit_and_abort_list_only_their_staging(
+        self, tmp_path, monkeypatch
+    ):
+        """commit() and abort() find the job's staged keys by listing
+        its own staging prefix, never the whole target store — a full
+        listing would cost every chunk key of the store per commit."""
+        import pyarrow as pa
+        from pyspark.sql import types as T
+
+        from arrow_zarr_spark import sinks
+        from arrow_zarr_spark.zarr.store import LocalStore
+
+        class CountingStore(LocalStore):
+            walks = 0
+
+            def walk_keys(self):
+                CountingStore.walks += 1
+                return super().walk_keys()
+
+        monkeypatch.setattr(sinks, "open_store", CountingStore)
+        path = str(tmp_path / "fmt5")
+        schema = T.StructType([T.StructField("x", T.LongType())])
+
+        def task(writer, lo, hi):
+            batch = pa.record_batch(
+                [pa.array(np.arange(lo, hi, dtype=np.int64))], names=["x"]
+            )
+            return writer.write(iter([batch]))
+
+        for lo in (0, 100):  # a create, then an append
+            w = sinks.ZarrWriter(path, schema, {"chunk_rows": "25"}, False)
+            msgs = [task(w, lo, lo + 70), task(w, lo + 70, lo + 100)]
+            CountingStore.walks = 0
+            w.commit(msgs)
+            assert CountingStore.walks == 0
+        w = sinks.ZarrWriter(path, schema, {"chunk_rows": "25"}, False)
+        msgs = [task(w, 500, 560)]
+        CountingStore.walks = 0
+        w.abort(msgs)
+        assert CountingStore.walks == 0
+        store = LocalStore(path)
+        assert not any(k.startswith("__stage__") for k in store.walk_keys())
+        (arr,) = infer_store_arrays(store)
+        assert sorted(arr.read_all().tolist()) == list(range(200))
+
 
 class TestNullAndLayoutGuards:
     """Regression tests for review findings: silent NULL corruption and
